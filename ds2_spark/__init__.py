@@ -21,6 +21,13 @@ plans       end-to-end pipeline composition
 streaming   batch/streaming window demos over the events table
 """
 
+from . import _zipguard
+
+# Python workers import this package when they unpickle a UDF; from
+# then on every later task of that worker skips the per-task zip
+# directory re-reads (see _zipguard)
+_zipguard.install()
+
 __version__ = "0.1.0"
 
 SEED = 42

@@ -18,7 +18,7 @@ Spark shape: epochs fan out one task per epoch over a broadcast pool
 (mapInPandas) emitting a long votes table
 (epoch, clip_id, flagged, suggested); the cross-epoch majority
 aggregation (A5/A6: Laplace-smoothed vote average + suggestion
-matrix) is pure relational groupBy/pivot — no Python.
+matrix) is one relational groupBy — no Python.
 """
 
 from __future__ import annotations
@@ -138,17 +138,17 @@ def aggregate_votes(votes: DataFrame, scores: DataFrame) -> DataFrame:
     voted clip: (clip_id, times, noisy_avg, suggested_score,
     confidence)."""
     k = NUM_CLASSES
-    counts = (
-        votes.groupBy("clip_id")
-        .pivot("suggested", list(range(k)))
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-    )
-    base = votes.groupBy("clip_id").agg(
-        F.count("*").alias("times"),
+    # ONE aggregation over the votes: every consumer of `votes` re-runs
+    # the whole epoch fan-out. A NULL or out-of-range suggestion counts
+    # in `times` but for no class.
+    df = votes.groupBy("clip_id").agg(
+        F.count(F.lit(1)).alias("times"),
         F.sum("flagged").alias("n_flagged"),
-    )
-    df = base.join(counts, "clip_id").join(scores, "clip_id")
+        *[
+            F.count(F.when(F.col("suggested") == c, 1)).alias(str(c))
+            for c in range(k)
+        ],
+    ).join(scores, "clip_id")
     total = sum(F.col(str(c)) for c in range(k))
     smoothed = F.array(
         *[(F.col(str(c)) + 1.0) / (total + float(k)) for c in range(k)]

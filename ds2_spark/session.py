@@ -14,6 +14,8 @@ from pyspark.sql import SparkSession
 # Arrow batch ceiling: audio `bytes` rows are large (~100KB+ each at
 # median 6s/16kHz PCM16); 2k rows/batch keeps a batch under ~256MB.
 ARROW_MAX_RECORDS = 2048
+# generated-class cache entries: room for several runs' working sets
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -66,6 +68,13 @@ def get_spark(
         # per-job commit cost halves — measurable on this sandbox's
         # serialized-rename filesystem and on any object store.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # static: the generated-class cache, keyed by source text. At
+        # Spark's default of 100 entries it is smaller than one run's
+        # working set (a curation pipeline run compiles ~100-112
+        # classes, a q_corpus_build + q_bloom_decontaminate pass ~155),
+        # so every repeat misses, re-compiles with Janino and re-JITs.
+        # A hit returns the class compiled from the identical source.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -36,5 +36,22 @@ def fixture_paths():
 
 
 @pytest.fixture(scope="session")
+def tiny_cfg():
+    """The smallest calibration that still runs every curation stage."""
+    from ds2_spark.config import (
+        HocConfig, PipelineConfig, QualityConfig, SelectionConfig, VoteConfig,
+    )
+    from ds2_spark.operators.audio import FIXTURE_PCM16_ALIASES
+
+    return PipelineConfig(
+        hoc=HocConfig(rounds=2, sample_size=300, adam_steps=50),
+        vote=VoteConfig(epochs=4, k=5, sample_size=300),
+        selection=SelectionConfig(budget_frac=0.10),
+        quality=QualityConfig(pcm16_alias_codecs=FIXTURE_PCM16_ALIASES),
+        embed_dim=32,
+    )
+
+
+@pytest.fixture(scope="session")
 def clips_df(spark, fixture_paths):
     return spark.read.parquet(fixture_paths["clips"])

@@ -81,7 +81,8 @@ def aggregate_votes_oracle(votes, raw_scores: dict):
         d = per[cid]
         d["times"] += 1
         d["flagged"] += fl
-        d["cnt"][sg] += 1
+        if sg is not None and 0 <= sg < NUM_CLASSES:  # else: a vote for no class
+            d["cnt"][sg] += 1
     out = {}
     for cid, d in per.items():
         total = d["cnt"].sum()

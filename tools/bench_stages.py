@@ -52,7 +52,6 @@ def main() -> int:
                     help="timed repeats after one warmup (median reported)")
     args = ap.parse_args()
 
-    import numpy as np
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -63,13 +62,12 @@ def main() -> int:
         HocConfig, PipelineConfig, QualityConfig, SelectionConfig, VoteConfig,
     )
     from ds2_spark.operators.audio import FIXTURE_PCM16_ALIASES
-    from ds2_spark.operators.hoc import estimate_t, t_given_noisy
     from ds2_spark.operators.longtail import lt_scores
     from ds2_spark.operators.selection import select_subset
-    from ds2_spark.operators.votes import aggregate_votes, curate_scores, vote_epochs
-    from ds2_spark.plans.curation import calibrate_rater, collect_pool, embed_candidates
-    from ds2_spark.plans.pipeline import rule_decisions, transcript_features
-    from ds2_spark.operators.audio import audio_sanity_exprs
+    from ds2_spark.plans.curation import (
+        attach_selection, calibrate_rater, collect_pool, embed_candidates,
+        make_rules_stage, score_candidates,
+    )
 
     cfg = PipelineConfig(
         hoc=HocConfig(rounds=args.hoc_rounds, sample_size=args.sample_size,
@@ -97,17 +95,9 @@ def main() -> int:
 
         # ---- rules (data-parallel) ----
         def _rules():
-            # in-place sanity exprs (same frame, no self-join) — the
-            # production shape in plans/curation._rules_stage
-            aud = audio_sanity_exprs(cfg.quality.dur_tolerance)
-            enriched = clips.withColumn("pcm_ok", aud["pcm_ok"]).withColumn(
-                "dur_ok", aud["dur_ok"]
-            )
-            feats = transcript_features(enriched, cfg, keep_cols=("pcm_ok", "dur_ok"))
-            r = rule_decisions(feats, audio=None, cfg=cfg).select(
-                "clip_id", "transcript", "reason", "keep_rules",
-                "transcript_scrubbed",
-            )
+            # the production stage, so the fixture's flac/opus-tagged
+            # PCM16 clips pass dur_ok exactly as in curation_pipeline
+            r = make_rules_stage(cfg)(clips)
             r.write.mode("overwrite").parquet(f"{wd}/rules_{tag}")
             return spark.read.parquet(f"{wd}/rules_{tag}")
 
@@ -136,7 +126,7 @@ def main() -> int:
             res[1].count()
             return res
 
-        hoc_res, curated = clock("calibration", _calib)
+        _hoc, curated = clock("calibration", _calib)
 
         # ---- lt (data-parallel) ----
         def _lt():
@@ -148,33 +138,16 @@ def main() -> int:
 
         # ---- selection + decisions (data-parallel-ish) ----
         def _select():
-            scored = (
-                candidates.select("clip_id")
-                .join(curated.select("clip_id", "final_score"), "clip_id", "left")
-                .join(
-                    scores.filter(F.col("rater") == args.rater)
-                    .select("clip_id", "raw_score"),
-                    "clip_id", "left",
-                )
-                .withColumn(
-                    "final_score",
-                    F.coalesce("final_score", "raw_score", F.lit(0)).cast("int"),
-                )
-                .join(lt, "clip_id", "left")
-                .na.fill({"lt_score": 0.0})
+            scored = score_candidates(
+                candidates,
+                curated,
+                scores.filter(F.col("rater") == args.rater)
+                .select("clip_id", "raw_score"),
+                lt,
             ).persist()  # 3 serial jobs read it (count, histogram, write)
             n_cand = scored.count()
             budget = max(int(round(cfg.selection.budget_frac * n_cand)), 1)
-            sel = select_subset(scored, budget)
-            dec = (
-                rules.select("clip_id", "reason")
-                .join(sel.select("clip_id", "selected", "final_score", "lt_score"),
-                      "clip_id", "left")
-                .withColumn(
-                    "keep", F.coalesce(F.col("selected"), F.lit(False))
-                    & (F.col("reason") == "candidate"),
-                )
-            )
+            dec = attach_selection(rules, select_subset(scored, budget))
             dec.write.mode("overwrite").parquet(f"{wd}/dec_{tag}")
             scored.unpersist()
 

@@ -2,7 +2,7 @@
 entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare
 row count, schema (column names), and order-insensitive values.
 
-Usage: python tools/check_contract.py [sf_dir] [only_query ...]
+Usage: python tools/check_contract.py [--json-out FILE] [sf_dir] [only_query ...]
 """
 
 from __future__ import annotations
@@ -49,6 +49,10 @@ def main() -> int:
     json_out = None
     if "--json-out" in argv:
         i = argv.index("--json-out")
+        if i + 1 == len(argv):
+            print("--json-out needs a FILE\n" + __doc__.strip().splitlines()[-1],
+                  file=sys.stderr)
+            return 2
         json_out = argv[i + 1]
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"

@@ -23,14 +23,6 @@ class HocConfig:
     adam_steps: int = 1500      # hoc.py:276 (ref 1501)
     adam_lr: float = 0.1        # tulu_template.py:33
     seed: int = SEED
-    # rounds packed per Spark task (NOTES.md queue #7): >1 = fewer,
-    # fatter tasks — the broadcast sample pool is deserialized once
-    # per TASK, so packing amortizes it when slots << rounds. Results
-    # are identical for any value (each round keeps its own seed).
-    # 0 = AUTO: task count = min(rounds, 2 x defaultParallelism) —
-    # every slot gets ~2 tasks (balance) and per-task overhead stops
-    # scaling with the round count.
-    rounds_per_task: int = 0
 
 
 @dataclass(frozen=True)
@@ -41,10 +33,7 @@ class VoteConfig:
     epochs: int = 51            # detect.py:61 `num_epoch`
     k: int = 10                 # tulu_template.py:43
     sample_size: int = 35000    # knn.py:66-70 (ref ≤50k)
-    min_similarity: float = 0.0
     seed: int = SEED
-    # epochs packed per Spark task; 0 = AUTO (see HocConfig.rounds_per_task)
-    epochs_per_task: int = 0
 
 
 @dataclass(frozen=True)
@@ -53,7 +42,6 @@ class SelectionConfig:
 
     budget_frac: float = 0.05    # ref: 10,000 of 300,932 (subset_generation.py:98)
     confidence_min: float = 0.5  # subset_generation.py:99
-    seed: int = SEED
 
 
 @dataclass(frozen=True)

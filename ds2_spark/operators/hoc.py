@@ -95,7 +95,7 @@ def consensus_counts(
 
     from .votes import _fanout_partitions
 
-    n_parts = _fanout_partitions(spark, rounds, cfg.rounds_per_task)
+    n_parts = _fanout_partitions(spark, rounds)
     per_round = spark.range(0, rounds, 1, numPartitions=n_parts).mapInPandas(
         _op, schema="y0 int, y1 int, y2 int, cnt double"
     )

@@ -103,24 +103,21 @@ def vote_epochs(
             for ep in pdf["id"].tolist():
                 yield epoch_votes_numpy(e_, l_, c_, nr_, int(ep), cfg)
 
-    n_parts = _fanout_partitions(spark, cfg.epochs, cfg.epochs_per_task)
+    n_parts = _fanout_partitions(spark, cfg.epochs)
     return spark.range(0, cfg.epochs, 1, numPartitions=n_parts).mapInPandas(
         _op, schema="epoch int, clip_id string, flagged int, suggested int"
     )
 
 
-def _fanout_partitions(spark: SparkSession, n_units: int, per_task: int) -> int:
-    """Task count for an epoch/round fan-out. per_task>0: pack that
-    many units per task. per_task==0 (auto): ONE task per slot, so the
-    broadcast pool is deserialized O(slots) times instead of O(units)
-    and the straggler overhead is a single wave's ceil (e.g. 51 epochs
-    on 8 slots: sizes 6-7, wall 7/6.375 = 1.10 — measured better than
-    the former 2-tasks-per-slot packing whose two scheduling waves
-    gave up ~25% at the high parallelism level; NOTES.md #30).
-    Vote/round results are invariant to the partitioning (each unit is
-    seeded by its own id)."""
-    if per_task and per_task > 0:
-        return max(1, -(-n_units // per_task))
+def _fanout_partitions(spark: SparkSession, n_units: int) -> int:
+    """Task count for an epoch/round fan-out: ONE task per slot, so
+    the broadcast pool is deserialized O(slots) times instead of
+    O(units) and the straggler overhead is a single wave's ceil (e.g.
+    51 epochs on 8 slots: sizes 6-7, wall 7/6.375 = 1.10 — measured
+    better than the former 2-tasks-per-slot packing whose two
+    scheduling waves gave up ~25% at the high parallelism level;
+    NOTES.md #30). Vote/round results are invariant to the
+    partitioning (each unit is seeded by its own id)."""
     slots = spark.sparkContext.defaultParallelism
     return max(1, min(n_units, slots))
 

@@ -141,26 +141,20 @@ _RULE_COLS = (
 )
 
 
-def make_rules_stage(cfg: PipelineConfig, audio: DataFrame | None = None):
+def make_rules_stage(cfg: PipelineConfig):
     """The per-row rules+features stage as a pure lazy transform
-    (run_stage-compatible), shared by the one-shot pipeline and the
-    incremental delta path so the two can never drift."""
+    (run_stage-compatible), shared by the one-shot pipeline, the
+    incremental delta path and the streaming rules query so they can
+    never drift.
+
+    Audio sanity is JVM-only metadata computed IN PLACE on the same
+    frame (audio_sanity_exprs): rules is ONE scan -> project ->
+    (pandas UDFs) with no exchange, and the same plan runs under
+    Structured Streaming, where a separate audio frame would make
+    rule_decisions a stream-stream join."""
+    from ..operators.audio import audio_sanity_exprs
 
     def _rules_stage(c: DataFrame) -> DataFrame:
-        if audio is not None:
-            # caller supplied a separate (e.g. full-decode) sanity table:
-            # keyed join, bytes never in the shuffle
-            return rule_decisions(transcript_features(c, cfg), audio, cfg).select(
-                *_RULE_COLS
-            )
-        # Default: JVM-only metadata sanity computed IN PLACE on the same
-        # frame (audio_sanity_exprs — the streaming twin's shape). The
-        # former audio_sanity_fast(c) ⋈ features(c) form scanned clips
-        # twice and shuffled the transcript payload through the join;
-        # in-place exprs make rules ONE scan → project → (pandas UDFs)
-        # with no exchange at all — the shape that scales to 100 TB.
-        from ..operators.audio import audio_sanity_exprs
-
         aud = audio_sanity_exprs(
             cfg.quality.dur_tolerance, cfg.quality.pcm16_alias_codecs
         )
@@ -223,7 +217,6 @@ def curation_pipeline(
     scores: DataFrame,
     cfg: PipelineConfig | None = None,
     rater: str = "rater_a",
-    audio: DataFrame | None = None,
     checkpoint_root: str | None = None,
     run_id: str = "run0",
     n_waves: int = 8,
@@ -245,7 +238,7 @@ def curation_pipeline(
     """
     cfg = cfg or PipelineConfig()
 
-    _rules_stage = make_rules_stage(cfg, audio)
+    _rules_stage = make_rules_stage(cfg)
 
     if checkpoint_root:
         from ..sources.lineage import run_stage

@@ -363,37 +363,35 @@ def _write_drift_metrics(
     )
 
 
-def _checkpointed_rows(
+def _batch_stages(
     spark: SparkSession,
     clips: DataFrame,
-    scores: DataFrame,
-    curated: DataFrame,
-    frozen: FrozenCalibration,
     cfg: PipelineConfig,
     root: str,
     batch_id: int,
     n_waves: int,
     waves_per_commit: int | None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(rules, emb, snapshot_rows) for one batch through the lineage
-    wave-checkpoint protocol. Per-batch stage names keep batches'
-    partition overwrites and lineage rows disjoint."""
+) -> tuple[DataFrame, DataFrame]:
+    """(rules, emb) for one batch through the lineage wave-checkpoint
+    protocol, under run id b{K} and stages rules_b{K}/embed_b{K}.
+    Per-batch stage names keep batches' partition overwrites and
+    lineage rows disjoint."""
+    run_id = f"b{batch_id}"
     rules = run_stage(
-        spark, clips, make_rules_stage(cfg), root, f"b{batch_id}",
-        f"rules_b{batch_id}", n_waves=n_waves, waves_per_commit=waves_per_commit,
+        spark, clips, make_rules_stage(cfg), root, run_id, f"rules_{run_id}",
+        n_waves=n_waves, waves_per_commit=waves_per_commit,
     )
     emb = run_stage(
         spark,
         rules.filter(F.col("keep_rules")).select("clip_id", "transcript"),
         lambda d: embed_candidates(d, cfg),
         root,
-        f"b{batch_id}",
-        f"embed_b{batch_id}",
+        run_id,
+        f"embed_{run_id}",
         n_waves=n_waves,
         waves_per_commit=waves_per_commit,
     )
-    rows = _per_clip_rows(rules, emb, scores, curated, frozen, cfg, batch_id)
-    return rules, emb, rows
+    return rules, emb
 
 
 def bootstrap_curation(
@@ -410,20 +408,7 @@ def bootstrap_curation(
     it to disk, write snapshot batch 0, and select. Subsequent
     batches go through incremental_update."""
     cfg = cfg or PipelineConfig()
-    rules = run_stage(
-        spark, clips, make_rules_stage(cfg), root, "b0", "rules_b0",
-        n_waves=n_waves, waves_per_commit=waves_per_commit,
-    )
-    emb = run_stage(
-        spark,
-        rules.filter(F.col("keep_rules")).select("clip_id", "transcript"),
-        lambda d: embed_candidates(d, cfg),
-        root,
-        "b0",
-        "embed_b0",
-        n_waves=n_waves,
-        waves_per_commit=waves_per_commit,
-    )
+    rules, emb = _batch_stages(spark, clips, cfg, root, 0, n_waves, waves_per_commit)
     frozen, live_curated = fit_frozen(
         spark, rules, emb, scores, cfg, rater, model_version=0
     )
@@ -469,10 +454,10 @@ def incremental_update(
         raise ValueError("batch_id 0 is the bootstrap; deltas start at 1")
     cfg = cfg or PipelineConfig()
     frozen, curated = load_calibration(spark, root)
-    rules, emb, rows = _checkpointed_rows(
-        spark, delta_clips, scores, curated, frozen, cfg, root,
-        batch_id, n_waves, waves_per_commit,
+    rules, emb = _batch_stages(
+        spark, delta_clips, cfg, root, batch_id, n_waves, waves_per_commit
     )
+    rows = _per_clip_rows(rules, emb, scores, curated, frozen, cfg, batch_id)
     write_snapshot_batch(rows, root, batch_id)
     drift = drift_report(rules, emb, frozen, thresholds)
     _write_drift_metrics(spark, root, batch_id, drift)

@@ -160,30 +160,16 @@ CLIPS_STREAM_SCHEMA = T.StructType(
 
 
 def streaming_rule_decisions(clips_stream: DataFrame, cfg=None) -> DataFrame:
-    """The flagship quality-filter rules stage (langid + ppl + quality
-    ratios + scrub + audio metadata sanity + reason codes) applied to
-    a STREAMING clips DataFrame. Every stage transformation is
-    stateless per row (column exprs + Arrow pandas UDFs), so the
-    identical plan runs under Structured Streaming unchanged — the
-    incremental-ingest twin of plans/pipeline.rule_decisions, with
+    """The flagship quality-filter rules stage, the batch pipeline's own
+    `make_rules_stage` (langid + ppl + quality ratios + scrub + audio
+    metadata sanity + reason codes), applied to a STREAMING clips
+    DataFrame. Every stage transformation is stateless per row, so the
+    identical plan runs under Structured Streaming unchanged, with
     stream==batch equality pinned in tests."""
     from ..config import PipelineConfig
-    from ..operators.audio import audio_sanity_exprs
-    from ..plans.pipeline import rule_decisions, transcript_features
+    from ..plans.curation import make_rules_stage
 
-    cfg = cfg or PipelineConfig()
-    # audio sanity rides the SAME frame as column expressions — a
-    # separate audio DF would make rule_decisions a stream-stream
-    # left join, which Structured Streaming rejects without
-    # watermark+interval machinery the per-row semantics don't need
-    aud = audio_sanity_exprs(
-        cfg.quality.dur_tolerance, cfg.quality.pcm16_alias_codecs
-    )
-    enriched = clips_stream.withColumn("pcm_ok", aud["pcm_ok"]).withColumn(
-        "dur_ok", aud["dur_ok"]
-    )
-    feats = transcript_features(enriched, cfg, keep_cols=("pcm_ok", "dur_ok"))
-    return rule_decisions(feats, audio=None, cfg=cfg).select(
+    return make_rules_stage(cfg or PipelineConfig())(clips_stream).select(
         "clip_id", "lang", "reason", "keep_rules", "transcript_scrubbed"
     )
 

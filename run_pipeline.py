@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """spark-submit entry point for the quality-filter pipeline.
 
-Ships unchanged at any parallelism (north_rule):
+Ships unchanged at any parallelism (north_rule). Build the --py-files
+artifact first (dist/ is not committed), then submit:
 
+  python tools/make_pyfiles.py
   spark-submit --master local[8]  --py-files dist/ds2_spark.zip \
       run_pipeline.py --clips fx/clips.parquet --scores fx/scores.parquet \
       --out /tmp/out --checkpoint /tmp/ckpt

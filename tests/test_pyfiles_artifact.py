@@ -1,10 +1,13 @@
-"""The spark-submit --py-files artifact must stay in sync with the
-package tree — a stale zip ships a pipeline missing its newest
-modules (found live: dist/ds2_spark.zip lacked operators/bpe.py and
+"""The spark-submit --py-files artifact is built, not committed:
+tools/make_pyfiles.build must ship every package module, byte for
+byte (found live: a stale committed zip lacked operators/bpe.py and
 operators/spandedup.py after they landed)."""
 
+import importlib.util
 import os
 import zipfile
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -22,32 +25,34 @@ def _tree_modules() -> set[str]:
     return mods
 
 
-def test_zip_contains_every_package_module():
-    z = zipfile.ZipFile(os.path.join(ROOT, "dist", "ds2_spark.zip"))
-    names = set(z.namelist())
-    missing = sorted(_tree_modules() - names)
-    assert not missing, (
-        f"dist/ds2_spark.zip is stale — run tools/make_pyfiles.py; "
-        f"missing: {missing}"
+@pytest.fixture(scope="module")
+def built_zip(tmp_path_factory):
+    spec = importlib.util.spec_from_file_location(
+        "make_pyfiles", os.path.join(ROOT, "tools", "make_pyfiles.py")
     )
+    make_pyfiles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(make_pyfiles)
+    out = make_pyfiles.build(str(tmp_path_factory.mktemp("dist") / "ds2_spark.zip"))
+    with zipfile.ZipFile(out) as z:
+        yield z
 
 
-def test_zip_modules_match_tree_bytes():
-    """Same set is not enough: a zip built before an edit still lists
-    the file. Compare content bytes module by module."""
-    z = zipfile.ZipFile(os.path.join(ROOT, "dist", "ds2_spark.zip"))
+def test_zip_contains_every_package_module(built_zip):
+    missing = sorted(_tree_modules() - set(built_zip.namelist()))
+    assert not missing, f"tools/make_pyfiles.py left out: {missing}"
+
+
+def test_zip_modules_match_tree_bytes(built_zip):
+    """Same set is not enough: compare content bytes module by module."""
     stale = []
     for rel in sorted(_tree_modules()):
         with open(os.path.join(ROOT, rel), "rb") as f:
             on_disk = f.read()
         try:
-            in_zip = z.read(rel)
+            in_zip = built_zip.read(rel)
         except KeyError:
             stale.append(rel)
             continue
         if in_zip != on_disk:
             stale.append(rel)
-    assert not stale, (
-        f"dist/ds2_spark.zip content drifted — run tools/make_pyfiles.py; "
-        f"stale: {stale}"
-    )
+    assert not stale, f"tools/make_pyfiles.py output differs from the tree: {stale}"

@@ -784,7 +784,8 @@ invocation emits all inputs and the verdict into the same artifact.
 
 ## Full-job result (layer 1)
 
-Job: `spark-submit --master local[N] --py-files dist/ds2_spark.zip
+Job: `python tools/make_pyfiles.py` (builds dist/ds2_spark.zip), then
+`spark-submit --master local[N] --py-files dist/ds2_spark.zip
 run_pipeline.py` — the full quality-filter + calibration pipeline
 (rules, scrub, langid, ppl, audio sanity, embeddings, HOC 50 rounds,
 votes 51 epochs, curation, lt-score, selection) on a deterministic

@@ -1,21 +1,24 @@
 """Per-stage wall-clock decomposition of the quality-filter pipeline
 (Amdahl evidence for BENCH/BASELINE.md).
 
-Runs each pipeline stage with an explicit materialization barrier and
-prints ONE JSON line of stage seconds. Stages are classed:
+Runs the production `curation_pipeline` under the benchmark's
+outside-in tracer (perfbench/spans.py), which persists and counts each
+layer's output before the layer's span closes, and prints ONE JSON line
+of stage seconds (span self time). Stages are classed:
 
   data-parallel (scale with table size N — the 10^12-row design point):
     rules   transcript features + langid + ppl + scrub + audio sanity
             + rule decisions  (column exprs + Arrow pandas UDFs)
     embed   transcript embedding UDF over candidates
     lt      blocked kNN vs broadcast pool over ALL candidates
-    select  scale-safe dual-sort selection + decisions join + write
+    select  scoring + scale-safe selection + decisions join, then the
+            decisions executed into a no-op sink
 
   sample-bounded (O(1) in N by construction — reference ≤50k sampling
   contract, hoc.py:248-258):
-    pool    bounded embedding sample collect
-    hoc     consensus rounds (Spark fan-out) + 6x6 driver Adam solve
-    votes   vote epochs fan-out + relational aggregation + curation
+    pool         bounded embedding sample collect
+    calibration  pool-score fetch + HOC consensus rounds and 6x6 driver
+                 Adam solve + vote epochs, aggregation and curation
 
 Run via spark-submit at two parallelism levels; per-stage scaling
 efficiency of the data-parallel stages is the cluster-scale predictor
@@ -31,15 +34,28 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
-import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+# stage -> the tracer layers it sums
+STAGES = {
+    "rules": ("rules",),
+    "embed": ("embed",),
+    "pool": ("pool",),
+    "calibration": ("calibrate", "hoc", "votes"),
+    "lt": ("lt",),
+    "select": ("select",),
+}
+DATA_PARALLEL = ("rules", "embed", "lt", "select")
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--clips", required=True)
     ap.add_argument("--scores", required=True)
-    ap.add_argument("--workdir", default="/tmp/ds2_stage_bench")
     ap.add_argument("--rater", default="rater_a")
     ap.add_argument("--budget-frac", type=float, default=0.05)
     ap.add_argument("--hoc-rounds", type=int, default=50)
@@ -50,25 +66,19 @@ def main() -> int:
     ap.add_argument("--embed-dim", type=int, default=128)
     ap.add_argument("--repeats", type=int, default=1,
                     help="timed repeats after one warmup (median reported)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    from spans import Tracer
 
     from ds2_spark.config import (
         HocConfig, PipelineConfig, QualityConfig, SelectionConfig, VoteConfig,
     )
     from ds2_spark.operators.audio import FIXTURE_PCM16_ALIASES
-    from ds2_spark.operators.longtail import lt_scores
-    from ds2_spark.operators.selection import select_subset
-    from ds2_spark.plans.curation import (
-        attach_selection, calibrate_rater, collect_pool, embed_candidates,
-        make_rules_stage, score_candidates,
-    )
+    from ds2_spark.plans.curation import curation_pipeline
 
+    spark = SparkSession.builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     cfg = PipelineConfig(
         hoc=HocConfig(rounds=args.hoc_rounds, sample_size=args.sample_size,
                       adam_steps=args.adam_steps),
@@ -82,92 +92,36 @@ def main() -> int:
     clips = spark.read.parquet(args.clips)
     scores = spark.read.parquet(args.scores)
     n_clips = clips.count()
-    wd = args.workdir
+    slots = spark.sparkContext.defaultParallelism
 
     def one_pass(tag: str) -> dict:
-        t: dict[str, float] = {}
-
-        def clock(name: str, fn):
-            t0 = time.time()
-            out = fn()
-            t[name] = round(time.time() - t0, 3)
-            return out
-
-        # ---- rules (data-parallel) ----
-        def _rules():
-            # the production stage, so the fixture's flac/opus-tagged
-            # PCM16 clips pass dur_ok exactly as in curation_pipeline
-            r = make_rules_stage(cfg)(clips)
-            r.write.mode("overwrite").parquet(f"{wd}/rules_{tag}")
-            return spark.read.parquet(f"{wd}/rules_{tag}")
-
-        rules = clock("rules", _rules)
-        candidates = rules.filter(F.col("keep_rules")).select("clip_id", "transcript")
-
-        # ---- embed (data-parallel) ----
-        def _embed():
-            e = embed_candidates(candidates, cfg)
-            e.write.mode("overwrite").parquet(f"{wd}/emb_{tag}")
-            return spark.read.parquet(f"{wd}/emb_{tag}")
-
-        emb_df = clock("embed", _embed)
-
-        # ---- pool + hoc + votes (sample-bounded) ----
-        pool_emb, pool_ids = clock(
-            "pool", lambda: collect_pool(emb_df, cfg.knn_pool_max, cfg.seed)
-        )
-
-        def _calib():
-            res = calibrate_rater(spark, pool_emb, pool_ids, scores,
-                                  args.rater, cfg)
-            # calibrate_rater returns a lazily-persisted curated DF;
-            # force it here so epoch-kNN cost lands in THIS stage, not
-            # in the first downstream consumer
-            res[1].count()
-            return res
-
-        _hoc, curated = clock("calibration", _calib)
-
-        # ---- lt (data-parallel) ----
-        def _lt():
-            lt = lt_scores(emb_df, pool_emb, pool_ids, k=cfg.vote.k)
-            lt.write.mode("overwrite").parquet(f"{wd}/lt_{tag}")
-            return spark.read.parquet(f"{wd}/lt_{tag}")
-
-        lt = clock("lt", _lt)
-
-        # ---- selection + decisions (data-parallel-ish) ----
-        def _select():
-            scored = score_candidates(
-                candidates,
-                curated,
-                scores.filter(F.col("rater") == args.rater)
-                .select("clip_id", "raw_score"),
-                lt,
-            ).persist()  # 3 serial jobs read it (count, histogram, write)
-            n_cand = scored.count()
-            budget = max(int(round(cfg.selection.budget_frac * n_cand)), 1)
-            dec = attach_selection(rules, select_subset(scored, budget))
-            dec.write.mode("overwrite").parquet(f"{wd}/dec_{tag}")
-            scored.unpersist()
-
-        clock("select", _select)
-        # drop this pass's cached blocks (calibrate_rater persists the
-        # curated table) — leaked persists across passes degrade later
-        # scans via heap/GC pressure
-        curated.unpersist()
-        t["total"] = round(sum(v for k, v in t.items() if k != "total"), 3)
+        tracer = Tracer(spark, f"bench_stages.{tag}")
+        with tracer.installed():
+            res = curation_pipeline(spark, clips, scores, cfg, rater=args.rater)
+            with tracer.span("select", fn="write_decisions"):
+                res["decisions"].write.format("noop").mode("overwrite").save()
+        # leaked persists across passes degrade later scans via heap/GC
+        # pressure
+        tracer.release()
+        for df in res["_persisted"]:
+            df.unpersist()
+        tracer.read_counters()
+        layers = tracer.layers(slots)
+        t = {
+            stage: round(sum(layers.get(la, {}).get("wall_s", 0.0) for la in las), 3)
+            for stage, las in STAGES.items()
+        }
+        t["total"] = round(sum(t.values()), 3)
         return t
 
     one_pass("warm")  # warmup: JVM, python workers, kernel model tables
     runs = [one_pass(f"r{i}") for i in range(args.repeats)]
     med = {k: sorted(r[k] for r in runs)[len(runs) // 2] for k in runs[0]}
-    dp = ["rules", "embed", "lt", "select"]
     print(json.dumps({
         "n_clips": n_clips,
-        "parallelism": spark.sparkContext.defaultParallelism,
+        "parallelism": slots,
         "stages": med,
-        "data_parallel_sec": round(sum(med[k] for k in dp), 3),
+        "data_parallel_sec": round(sum(med[k] for k in DATA_PARALLEL), 3),
         "sample_bounded_sec": round(med["pool"] + med["calibration"], 3),
         "runs": runs,
     }))

@@ -72,7 +72,6 @@ def main() -> int:
     # ---- engine
     from ds2_spark.operators.hoc import t_given_noisy
     from ds2_spark.plans.curation import curation_pipeline
-    from ds2_spark.plans.pipeline import transcript_features
     from ds2_spark.session import get_spark
 
     spark = get_spark(app_name="f1_gate", cpus=a.cpus)
@@ -84,12 +83,10 @@ def main() -> int:
         r["clip_id"]: (bool(r["keep"]), r["reason"], r["final_score"])
         for r in result["decisions"].collect()
     }
-    # scrubbed transcripts from the same production stage
+    # scrubbed transcripts from the same run's rules stage
     scrub_eng = {
         r["clip_id"]: r["transcript_scrubbed"]
-        for r in transcript_features(clips, cfg)
-        .select("clip_id", "transcript_scrubbed")
-        .collect()
+        for r in result["rules"].select("clip_id", "transcript_scrubbed").collect()
     }
     engine_wall = time.time() - t0
     pool_size = result["pool_size"]

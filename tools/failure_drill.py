@@ -8,9 +8,9 @@ real wall time, restarts it cold, and proves the north-rule claim
 "resumable from checkpoint with per-partition lineage" end to end:
 
   1. control: one uninterrupted run of the rules stage
-     (transcript_features -> rule_decisions, the production keep/drop
-     path over `sources/lineage.run_stage` with waves_per_commit
-     commit groups) on a sharded fixture; record wall + an
+     (plans/curation.make_rules_stage, the production keep/drop path,
+     over `sources/lineage.run_stage` with waves_per_commit commit
+     groups) on a sharded fixture; record wall + an
      order-insensitive sha256 fingerprint of the output parquet.
   2. drill: same stage on a FRESH checkpoint root. The controller
      polls `_lineage` (pyarrow, no second Spark) and SIGKILLs the
@@ -50,16 +50,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 STAGE = "rules"
+# the checkpointed stages each mode runs
+MODE_STAGES = {"stage": (STAGE,), "pipeline": ("rules", "embed")}
 
 
 # ---------------------------------------------------------------- worker
 def worker(args) -> int:
     t0 = time.time()
-    if args.mode == "stage":
-        done0 = _done_waves(args.root)
-        print(f"PENDING={args.waves - len(done0)}", flush=True)
-    else:
-        print(f"PENDING={2 * args.waves - _lineage_rows(args.root)}", flush=True)
+    total = len(MODE_STAGES[args.mode]) * args.waves
+    print(f"PENDING={total - len(_done_rows(args.root))}", flush=True)
 
     from ds2_spark.config import (
         HocConfig,
@@ -111,20 +110,16 @@ def worker(args) -> int:
         spark.stop()
         return 0
 
-    from ds2_spark.plans.pipeline import rule_decisions, transcript_features
+    from ds2_spark.plans.curation import make_rules_stage
     from ds2_spark.sources.lineage import run_stage
 
     cfg = PipelineConfig(
         quality=QualityConfig(pcm16_alias_codecs=FIXTURE_PCM16_ALIASES)
     )
-
-    def stage_fn(df):
-        return rule_decisions(transcript_features(df, cfg), None, cfg)
-
     out = run_stage(
         spark,
         clips,
-        stage_fn,
+        make_rules_stage(cfg),
         root=args.root,
         run_id=args.run_id,
         stage=STAGE,
@@ -142,45 +137,37 @@ def worker(args) -> int:
 
 
 # ------------------------------------------------------------ controller
-def _done_waves(root: str) -> set[int]:
-    """Completed wave ids from the _lineage dir via pyarrow only (the
-    controller must never hold a second SparkSession). Tolerates
-    in-flight writes: non-parquet temp files are skipped, a file being
-    renamed between listdir and read is retried on the next poll."""
+def _done_rows(root: str) -> list[tuple[str, int]]:
+    """(stage, wave) of every status=done _lineage row, via pyarrow
+    only (the controller must never hold a second SparkSession).
+    Tolerates in-flight writes: non-parquet temp files are skipped, a
+    file being renamed between listdir and read is retried on the next
+    poll."""
     d = os.path.join(root, "_lineage")
     if not os.path.isdir(d):
-        return set()
+        return []
     import pyarrow.parquet as pq
 
-    waves: set[int] = set()
+    rows = []
     for f in os.listdir(d):
         if not f.endswith(".parquet"):
             continue
         try:
             t = pq.read_table(
-                os.path.join(d, f), columns=["partition_id", "status"]
+                os.path.join(d, f), columns=["stage", "partition_id", "status"]
             )
         except Exception:
             continue  # mid-rename/partial; next poll sees it
-        for pid, st in zip(
-            t.column("partition_id").to_pylist(), t.column("status").to_pylist()
-        ):
-            if st == "done":
-                waves.add(int(pid))
-    return waves
-
-
-def _lineage_rows(root: str) -> int:
-    d = os.path.join(root, "_lineage")
-    if not os.path.isdir(d):
-        return 0
-    import pyarrow.parquet as pq
-
-    n = 0
-    for f in os.listdir(d):
-        if f.endswith(".parquet"):
-            n += pq.read_table(os.path.join(d, f)).num_rows
-    return n
+        rows += [
+            (st, int(pid))
+            for st, pid, status in zip(
+                t.column("stage").to_pylist(),
+                t.column("partition_id").to_pylist(),
+                t.column("status").to_pylist(),
+            )
+            if status == "done"
+        ]
+    return rows
 
 
 def _fingerprint(out_dir: str) -> tuple[int, str]:
@@ -291,24 +278,9 @@ def _done_exactly_once(root: str, expect: dict[str, int]) -> tuple[bool, dict]:
     row. Resume that recomputed a committed wave would append a second
     done row for it (run_stage appends per commit, never rewrites), so
     duplicates here are the direct signature of committed-work rework."""
-    d = os.path.join(root, "_lineage")
-    import pyarrow.parquet as pq
     from collections import Counter
 
-    c: Counter = Counter()
-    for f in os.listdir(d):
-        if not f.endswith(".parquet"):
-            continue
-        t = pq.read_table(
-            os.path.join(d, f), columns=["stage", "partition_id", "status"]
-        )
-        for st, pid, status in zip(
-            t.column("stage").to_pylist(),
-            t.column("partition_id").to_pylist(),
-            t.column("status").to_pylist(),
-        ):
-            if status == "done":
-                c[(st, int(pid))] += 1
+    c = Counter(_done_rows(root))
     dupes = {f"{s}:{w}": n for (s, w), n in c.items() if n != 1}
     counts = {s: sum(1 for (st, _w) in c if st == s) for s in expect}
     ok = not dupes and all(counts.get(s, 0) == n for s, n in expect.items())
@@ -323,15 +295,12 @@ def controller(a) -> int:
         print(f"generating fixture n={a.clips} at {fixture}", flush=True)
         generate_all_sharded(fixture, n=a.clips, n_shards=16)
 
-    # progress metric the kill thresholds are measured in: completed
-    # waves of the single stage, or done _lineage rows across the
-    # pipeline's two checkpointed stages (rules + embed)
-    if a.mode == "stage":
-        progress = lambda root: len(_done_waves(root))  # noqa: E731
-        out_sub, total_waves = STAGE, a.waves
-    else:
-        progress = _lineage_rows
-        out_sub, total_waves = "decisions_out", 2 * a.waves
+    # the kill thresholds are measured in done _lineage rows: completed
+    # waves of the single stage, or across the pipeline's two
+    # checkpointed stages (rules + embed)
+    expect = {st: a.waves for st in MODE_STAGES[a.mode]}
+    total_waves = sum(expect.values())
+    out_sub = STAGE if a.mode == "stage" else "decisions_out"
 
     import shutil
 
@@ -360,7 +329,7 @@ def controller(a) -> int:
         while time.time() < deadline:
             if proc.poll() is not None:
                 break  # finished before the threshold was reached
-            done = progress(root_b)
+            done = len(_done_rows(root_b))
             if done >= thr:
                 _killpg(proc)
                 killed_at = done
@@ -403,7 +372,7 @@ def controller(a) -> int:
     print(f"final resume: {pending_line} wall={resume_wall:.1f}s", flush=True)
 
     n_drl, fp_drl = _fingerprint(os.path.join(root_b, out_sub))
-    lineage_rows = _lineage_rows(root_b)
+    lineage_rows = len(_done_rows(root_b))
     # bound by kills that HAPPENED, not thresholds configured: an
     # attempt that finished before its threshold loses nothing, and
     # counting it would loosen the bound by waves_per_commit — wide
@@ -416,11 +385,6 @@ def controller(a) -> int:
     # (incl. killed ones) count waves ATTEMPTED; lineage duplicates
     # would be the signature of a resume recomputing committed work
     waves_started = _waves_started(drill_logs)
-    expect = (
-        {STAGE: a.waves}
-        if a.mode == "stage"
-        else {"rules": a.waves, "embed": a.waves}
-    )
     once_ok, once_detail = _done_exactly_once(root_b, expect)
 
     result = {

@@ -90,8 +90,8 @@ def lsh_bucket_keys_udf(
     embedding is quantized to floor(x*scale + 0.5) int64 and the dot
     products are exact integer arithmetic — bit-for-bit reproducible
     in any engine (the deterministic-oracle path; see
-    queries_catalog._lsh_keys_sql which emits the same planes as SQL
-    literals)."""
+    queries_catalog.vectors._lsh_keys_sql, which emits the same planes
+    as SQL literals)."""
     from pyspark.sql.functions import pandas_udf
 
     pow2 = (1 << np.arange(n_planes, dtype=np.int64))
@@ -165,7 +165,7 @@ def lsh_topk(
     across engines and `rerank="hof"` swaps the NumPy rerank for the
     JVM fold that SQL oracles reproduce exactly — together they turn
     this from rows-only-checkable into an exact-oracle query
-    (quantized_plane_matrix; queries_catalog.q_ann_lsh)."""
+    (quantized_plane_matrix; queries_catalog.vectors.q_ann_lsh)."""
     if planes is None:
         planes = np.concatenate(
             [_plane_matrix(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
@@ -281,13 +281,16 @@ def lsh_neardup_pairs(
                 s = ai @ v[bj : bj + tile].T
                 if bi == bj:
                     # keep strictly-upper positions only (i < j, ids
-                    # sorted, so id_a < id_b exactly like the former
-                    # a.id < b.id join filter)
+                    # sorted, so id_a <= id_b)
                     s[np.tril_indices_from(s)] = -2.0
                 hit_i, hit_j = np.nonzero(s >= prefilter)
-                if len(hit_i):
-                    outs_a.append(ids[hit_i + bi])
-                    outs_b.append(ids[hit_j + bj])
+                a, b = ids[hit_i + bi], ids[hit_j + bj]
+                # id_a < id_b by VALUE: a duplicated id in one bucket
+                # is never paired with itself
+                keep = a < b
+                if keep.any():
+                    outs_a.append(a[keep])
+                    outs_b.append(b[keep])
         if not outs_a:
             return empty
         return pd.DataFrame(
@@ -451,7 +454,7 @@ def ivf_topk(
     fixed coarse quantizer is a valid IVF partition); with integer
     centroids + `quantize_scale` the assignment is exact integer
     arithmetic and `rerank="hof"` uses the SQL-reproducible cosine —
-    the deterministic-oracle twin (queries_catalog.q_ivf_topk)."""
+    the deterministic-oracle twin (queries_catalog.vectors.q_ivf_topk)."""
     if centroids is None:
         sample = _train_vectors(candidates, cv, train_sample, seed)
         cents = _kmeans_centroids(sample, n_centroids, seed)

@@ -11,7 +11,7 @@ incrementally:
     synchronously (memory sink) — the local smoke-test harness
 
 The same transformations run identically in batch (see
-queries_catalog.q_time_buckets, the batch twin of the windowed agg).
+queries_catalog.relational.q_time_buckets, the batch twin of the windowed agg).
 """
 
 from __future__ import annotations

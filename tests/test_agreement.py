@@ -187,7 +187,7 @@ def test_crossmodal_contract_query_flags_not_vacuous(spark):
     carry ' alt' variants."""
     from pyspark.sql import functions as F
 
-    from ds2_spark.queries_catalog import q_crossmodal_dup
+    from ds2_spark.queries_catalog.multimodal import q_crossmodal_dup
 
     out = q_crossmodal_dup(spark, "/root/testdata/sf0.001")
     r = out.agg(

@@ -169,7 +169,7 @@ def test_oracle_parity_on_mid_symbol_adversarial_corpus(spark):
     the small-vocab sf fixtures that can't trigger the case. Also
     plants a U+00A0 word (pandas-vs-Java whitespace) and single-char
     residue."""
-    from ds2_spark.queries_catalog import (
+    from ds2_spark.queries_catalog.text import (
         _BPE_N_MERGES,
         _bpe_encode_oracle_sql,
         _bpe_train_oracle_sql,
@@ -214,7 +214,7 @@ def test_oracle_parity_when_merges_run_dry(spark):
     before round n. The training oracle must emit exactly the learned
     merges (not NULL-poisoned rounds) and the encode oracle must use
     the last reached recursion depth, not the literal round count."""
-    from ds2_spark.queries_catalog import (
+    from ds2_spark.queries_catalog.text import (
         _BPE_N_MERGES,
         _bpe_encode_oracle_sql,
         _bpe_train_oracle_sql,

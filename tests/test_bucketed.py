@@ -124,3 +124,18 @@ def test_mismatched_layouts_refused(spark, bucketed_tables):
         write_bucketed(
             spark.range(3), "tb_bad", "/tmp/ds2_bucketed_t/bad", "id", 0
         )
+
+
+def test_q_bucketed_join_keeps_at_most_one_layout_dir(spark):
+    """Each q_bucketed_join call writes a fresh /tmp layout; the next
+    call removes the previous one instead of leaving it until exit."""
+    import glob
+
+    from ds2_spark.queries_catalog.relational import q_bucketed_join
+
+    before = set(glob.glob("/tmp/ds2_q_bucketed_*"))
+    counts = [
+        q_bucketed_join(spark, "/root/testdata/sf0.001").count() for _ in range(2)
+    ]
+    assert counts[0] == counts[1] > 0
+    assert len(set(glob.glob("/tmp/ds2_q_bucketed_*")) - before) <= 1

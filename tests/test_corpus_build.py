@@ -4,12 +4,13 @@ non-vacuously and the assembled ladder must be internally consistent
 
 import pytest
 
-from ds2_spark import queries_catalog
+from ds2_spark.queries_catalog import oracle_sql
+from ds2_spark.queries_catalog.text import q_corpus_build
 
 
 @pytest.fixture(scope="module")
 def built(spark):
-    return queries_catalog.q_corpus_build(
+    return q_corpus_build(
         spark, "/root/testdata/sf0.001"
     ).collect()
 
@@ -90,16 +91,14 @@ def test_capstone_oracle_parity_mixed_case_and_null(spark, tmp_path):
     engine = sorted(
         (r["doc_id"], r["source"], r["drop_reason"], r["kept"],
          r["n_tokens"])
-        for r in queries_catalog.q_corpus_build(spark, sf_dir).collect()
+        for r in q_corpus_build(spark, sf_dir).collect()
     )
     con = duckdb.connect()
     # Spark writes a parquet DIRECTORY; DuckDB needs the part glob
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{fx}/*.parquet'")
     oracle = sorted(
         tuple(t)
-        for t in con.sql(
-            queries_catalog.ORACLE_SQL["q_corpus_build"]
-        ).fetchall()
+        for t in con.sql(oracle_sql()["q_corpus_build"]).fetchall()
     )
     assert engine == oracle
     by_id = {t[0]: t for t in engine}

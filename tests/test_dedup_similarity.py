@@ -499,6 +499,27 @@ def test_lsh_neardup_max_bucket_caps_hot_bucket(spark):
     assert free == 40 * 39 // 2
 
 
+def test_lsh_neardup_duplicate_id_yields_no_self_pair(spark):
+    """Two rows sharing id 3 land in every bucket together; the
+    prefilter must compare id VALUES, so (3, 3) never comes out. The
+    unique-id pairs are exactly those of the same input without the
+    duplicate row."""
+    v = [1.0, 0.0, 0.0, 0.0]
+    unique = [(i, v) for i in range(6)]
+    kw = dict(dim=4, threshold=0.5, n_planes=4, n_tables=2)
+
+    def pairs(rows):
+        emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        out = lsh_neardup_pairs(emb, **kw).collect()
+        return {(r["id_a"], r["id_b"]) for r in out}
+
+    base = pairs(unique)
+    assert base == {(a, b) for a in range(6) for b in range(a + 1, 6)}
+    dup = pairs(unique + [(3, v)])
+    assert not {p for p in dup if p[0] == p[1]}
+    assert dup == base
+
+
 def test_ivf_topk_recall_and_exhaustive_probe_exactness(spark):
     """IVF coarse-quantizer ANN: decent recall at nprobe<<C, and
     EXACT equality with brute force when every centroid is probed

@@ -128,3 +128,25 @@ def test_ppm_decode_roundtrip():
     img = decode_ppm(ppm_p6(pix))
     assert img.shape == (10, 12, 3)
     assert (img[..., 0] == pix).all()
+
+
+def test_dhash_media_bytes_exact_past_int64_square(spark, tmp_path):
+    """The q_image_dhash synthesis at doc_id ~ 2e7, where x*x*7 of the
+    unreduced pixel argument x = pair*73 + k + 1 exceeds 2^63, equals
+    the pixel formula evaluated in Python ints."""
+    from ds2_spark.queries_catalog.synth import _dhash_media
+
+    ids = [20_000_000, 20_000_001, 20_000_058, 123_456_789]
+    spark.createDataFrame([(i,) for i in ids], "doc_id long").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    media = _dhash_media(spark, str(tmp_path)).collect()
+    got = {r["doc_id"]: bytes(r["bytes"]) for r in media}
+    for d in ids:
+        x = [(d - d % 2) * 73 + k + 1 for k in range(72)]
+        assert x[0] * x[0] * 7 >= 2**63
+        pix = [
+            (v * v * 7 + v * 13 + (97 if d % 2 == 1 and k % 29 == 0 else 0)) % 251
+            for k, v in enumerate(x)
+        ]
+        assert got[d] == b"P6\n9 8\n255\n" + bytes(p for p in pix for _ in range(3))

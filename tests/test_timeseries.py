@@ -3,8 +3,8 @@
 The as-of twin is pandas.merge_asof — a mature range-semantics
 implementation sharing no code with the union+running-window plan
 under test. Sessionization is pinned against a hand-walked per-user
-loop. (The DuckDB contract oracles in queries_catalog.py add a third
-independent engine at sf0.01.)
+loop. (The DuckDB contract oracles in ds2_spark/queries_catalog/ add
+a third independent engine at sf0.01.)
 """
 
 import datetime as dt

@@ -7,10 +7,10 @@ the text-to-markup ratio, a boilerplate signal CCNet-class filters
 threshold on (a page that is 95% markup is navigation chrome, not
 content).
 
-One spec, three engines (the scrub.py discipline): Spark Columns,
-DuckDB SQL, Python twin, all emitted from this module; explicit ASCII
-classes, RE2-compatible regexes (non-greedy + inline (?is) flags are
-in RE2; no backrefs/lookaround).
+One spec, three engines (the scrub.py discipline): Spark Columns and
+DuckDB SQL emitted from this module, and a Python twin in
+tests/oracle/twins.py; explicit ASCII classes, RE2-compatible regexes
+(non-greedy + inline (?is) flags are in RE2; no backrefs/lookaround).
 
 Pipeline (order is the spec):
   1. remove <script...>...</script>, <style...>...</style>, <!-- -->
@@ -36,8 +36,6 @@ into the text (a later length/entropy filter catches such pages).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -58,10 +56,6 @@ NAMED_ENTITIES = (
     ("&apos;", "'"),
     ("&amp;", "&"),
 )
-
-
-def _cp_ok_py(n: int) -> bool:
-    return 32 <= n <= 65533 and not (55296 <= n <= 57343)
 
 
 # --------------------------------------------------------- Spark side
@@ -175,30 +169,3 @@ def strip_html_sql(expr: str) -> str:
         d = dst.replace("'", "''")
         t = f"replace({t}, '{src}', '{d}')"
     return f"trim(regexp_replace({t}, '{WS_RUN}', ' ', 'g'), ' ')"
-
-
-# -------------------------------------------------------- Python twin
-
-_DEC_CRE = re.compile(DEC_ENT_RE)
-_HEX_CRE = re.compile(HEX_ENT_RE)
-
-
-def strip_html_py(text: "str | None") -> "str | None":
-    if text is None:
-        return None
-    t = re.sub(SCRIPT_RE, " ", text)
-    t = re.sub(STYLE_RE, " ", t)
-    t = re.sub(COMMENT_RE, " ", t)
-    t = re.sub(TAG_RE, " ", t)
-    for d in _DEC_CRE.findall(t):
-        n = int(d)
-        t = t.replace(f"&#{d};", chr(n) if _cp_ok_py(n) else f"&#{d};")
-    for h in _HEX_CRE.findall(t):
-        n = int(h, 16)
-        for x in ("x", "X"):
-            t = t.replace(
-                f"&#{x}{h};", chr(n) if _cp_ok_py(n) else f"&#{x}{h};"
-            )
-    for src, dst in NAMED_ENTITIES:
-        t = t.replace(src, dst)
-    return re.sub(WS_RUN, " ", t).strip(" ")

@@ -30,8 +30,6 @@ The mixed-script flag is integer-exact: two scripts each holding
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -126,33 +124,4 @@ def script_count_sql(expr: str) -> dict[str, str]:
             f"CASE WHEN {expr} IS NOT NULL"
             f" THEN ({letters} >= 20 AND {major} >= 2) END"
         ),
-    }
-
-
-_COMPILED = {
-    k: re.compile(_cls(v, "java")) for k, v in SCRIPT_RANGES.items()
-}
-
-
-def script_counts_py(text: "str | None") -> "dict | None":
-    """Python twin (same regex flavor as Spark's Java classes)."""
-    if text is None:
-        return None
-    counts = {
-        f"n_{k}": len(text) - len(cre.sub("", text))
-        for k, cre in _COMPILED.items()
-    }
-    letters = sum(
-        counts[f"n_{k}"] for k in ("latin", "cyrillic", "cjk", "arabic")
-    )
-    major = sum(
-        1
-        for k in ("latin", "cyrillic", "cjk", "arabic")
-        if counts[f"n_{k}"] * 5 >= letters
-    )
-    return {
-        "n_chars": len(text),
-        **counts,
-        "n_letters": letters,
-        "is_mixed": letters >= 20 and major >= 2,
     }

@@ -401,48 +401,3 @@ def _cc_pass_sql(expr: str) -> str:
 def scrub_cc_sql(expr: str) -> str:
     """DuckDB SQL expression applying the identical two-pass algorithm."""
     return _cc_pass_sql(_cc_pass_sql(expr))
-
-
-_CC_CRE = re.compile(CC_CAND_RE, re.ASCII)
-
-
-def _cc_windows_py(run: str) -> list[str]:
-    """Token-aligned 13..19-digit windows of a run, (start asc, length
-    desc) — the same enumeration the Spark/SQL expressions perform."""
-
-    def isdig(ch: str) -> bool:
-        return "0" <= ch <= "9"
-
-    n = len(run)
-    starts = [
-        i for i in range(n) if isdig(run[i]) and (i == 0 or not isdig(run[i - 1]))
-    ]
-    ends = [
-        i
-        for i in range(n)
-        if isdig(run[i]) and (i == n - 1 or not isdig(run[i + 1]))
-    ][::-1]
-    out = []
-    for a in starts:
-        for b in ends:
-            if b < a:
-                continue
-            sub = run[a : b + 1]
-            d = sub.replace(" ", "").replace("-", "")
-            if 13 <= len(d) <= 19 and luhn_valid_py(d):
-                out.append(sub)
-    return out
-
-
-def _cc_pass_py(text: str) -> str:
-    for run in [m.group(2) for m in _CC_CRE.finditer(text)]:
-        for win in _cc_windows_py(run):
-            text = text.replace(win, CC_TAG)
-    return text
-
-
-def scrub_cc_py(text: "str | None") -> "str | None":
-    """Python twin for oracles/fixtures."""
-    if text is None:
-        return None
-    return _cc_pass_py(_cc_pass_py(text))

@@ -28,7 +28,6 @@ from . import textkernels as tk
 # ranges makes Spark, DuckDB, and any NumPy twin tokenize identically
 # on EVERY input, not just fixture-safe text. Both Java regex and RE2
 # interpret \xhh inside a class.
-WS_CLASS = r"[ \t\n\x0b\f\r]"
 WS_SPLIT = r"[ \t\n\x0b\f\r]+"
 NON_WS_CLASS = r"[^ \t\n\x0b\f\r]"
 # POSIX punct: 0x21-0x2f 0x3a-0x40 0x5b-0x60 0x7b-0x7e (== [:punct:]).

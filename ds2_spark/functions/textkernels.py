@@ -179,20 +179,6 @@ def ppl_model() -> tuple[np.ndarray, np.ndarray, float]:
     return cnt3, cnt2, 0.75
 
 
-def _trigram_context_buckets(text: str) -> tuple[np.ndarray, np.ndarray]:
-    """(trigram bucket, leading-bigram bucket) for every trigram."""
-    data = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-    if len(data) < 3:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    h3 = _byte_ngram_hashes(data, 3) + np.uint64(0x9E3779B9 * 3)
-    h2 = _byte_ngram_hashes(data, 2)[:-1] + np.uint64(0x9E3779B9 * 2)
-    return (
-        (h3 % np.uint64(PPL_BUCKETS)).astype(np.int64),
-        (h2 % np.uint64(PPL_BUCKETS)).astype(np.int64),
-    )
-
-
 def perplexities(
     texts: "list[str] | np.ndarray",
     model: "tuple[np.ndarray, np.ndarray, float] | None" = None,

@@ -12,7 +12,7 @@ first group-by key of the whole pipeline, so both must be cheap
 recall).
 
 One spec, three engines (the scrub.py discipline — Spark Columns,
-DuckDB SQL strings, a Python twin for fixtures/oracles; explicit
+DuckDB SQL strings, and a Python twin in tests/oracle/twins.py; explicit
 ASCII classes, no \\b / \\d / \\s, RE2-compatible — no backrefs or
 lookaround):
 
@@ -45,8 +45,6 @@ the call sites).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -283,82 +281,3 @@ def url_parts_sql_ctes(src: str, expr: str = "raw") -> tuple[str, dict]:
         )
         prev = rel
     return ",\n    ".join(steps), _url_public(env)
-
-
-# -------------------------------------------------------- Python twin
-
-_SCHEME_CRE = re.compile(SCHEME_RE)
-_HOST_OK_CRE = re.compile(HOST_OK_RE)
-_TRACKING_CRE = re.compile(TRACKING_PARAM_RE)
-_REJECT_CRE = re.compile(
-    "[" + re.escape("".join(chr(c) for c in _REJECT_CPS)) + "]"
-)
-
-
-def url_parts_py(url: "str | None") -> "dict | None":
-    """Python twin (fixtures/oracles). Returns the same keys as
-    url_parts; None for NULL input; valid=False rows carry None in
-    every derived field."""
-    if url is None:
-        return None
-    nofrag = url.split("#", 1)[0]
-    m = _SCHEME_CRE.match(nofrag)
-    scheme = m.group(1).lower() if m else ""
-    rest = nofrag[m.end() :] if m else ""
-    authority = re.match(r"^([^/?#]*)", rest).group(1)
-    hostport = authority.rsplit("@", 1)[-1]
-    had_user = len(authority) != len(hostport)
-    rawhost = hostport.split(":", 1)[0].lower()
-    pm = re.search(r":([0-9]+)$", hostport)
-    port = pm.group(1) if pm else ""
-    host = re.sub(r"^www\.", "", rawhost)
-    host_ok = (
-        bool(_HOST_OK_CRE.match(rawhost))
-        and ".." not in rawhost
-        and len(host) > 0
-    )
-    port_ok = bool(re.match(r"^[^:]*(:[0-9]+)?$", hostport))
-    ws_free = not _REJECT_CRE.search(url)
-    valid = scheme in ("http", "https") and host_ok and port_ok and ws_free
-    invalid = {k: None for k in (
-        "scheme", "host", "port", "path", "query", "domain",
-        "had_userinfo", "canonical",
-    )}
-    if not valid:
-        return {"valid": False, **invalid, "had_userinfo": False}
-    if (scheme, port) in DEFAULT_PORTS or port == "":
-        dport = ""
-    else:
-        dport = port
-    pmatch = re.match(r"^[^/?#]*(/[^?#]*)?", rest).group(1)
-    path = pmatch if pmatch else "/"
-    qm = re.search(r"\?(.*)$", rest)
-    query = qm.group(1) if qm else ""
-    kept = sorted(
-        p for p in query.split("&") if p != "" and not _TRACKING_CRE.match(p)
-    )
-    cquery = "&".join(kept)
-    labels = [x for x in host.split(".") if x != ""]
-    if len(labels) >= 3 and len(labels[-1]) == 2 and labels[-2] in _SLD_SET:
-        domain = ".".join(labels[-3:])
-    elif len(labels) >= 2:
-        domain = ".".join(labels[-2:])
-    else:
-        domain = host
-    canonical = (
-        f"{scheme}://{host}"
-        + (f":{dport}" if dport else "")
-        + path
-        + (f"?{cquery}" if cquery else "")
-    )
-    return {
-        "valid": True,
-        "scheme": scheme,
-        "host": host,
-        "port": dport,
-        "path": path,
-        "query": cquery,
-        "domain": domain,
-        "had_userinfo": had_user,
-        "canonical": canonical,
-    }

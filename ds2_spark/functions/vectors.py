@@ -1,9 +1,9 @@
 """Vector column functions over array<float> embeddings.
 
 Built-in higher-order functions only (JVM-side) — cosine/dot/norm as
-expressions (reference equivalents: docta/core/core_utils.py:6-11
-cosine distance, preprocess.py:80 L2 normalize). The blocked-NumPy
-variants used inside kNN kernels live in operators/knn.py.
+expressions (reference equivalent: docta/core/core_utils.py:6-11
+cosine distance). The blocked-NumPy variants used inside kNN kernels,
+L2 normalization included, live in operators/knn_kernels.py.
 """
 
 from __future__ import annotations
@@ -33,23 +33,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_distance(a: Column | str, b: Column | str) -> Column:
-    return F.lit(1.0) - cosine_similarity(a, b)
-
-
-def l2_normalize(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    n = norm(a)
-    return F.transform(a, lambda v: v / n)
-
-
-def sigmoid_longtail(c: Column | str) -> Column:
-    """2/(1+e^{-x}) - 1, rounded to 4dp — the reference's long-tail
-    score mapping (docta/core/get_lr_score.py:48-50)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.round(F.lit(2.0) / (F.lit(1.0) + F.exp(-c)) - F.lit(1.0), 4)
 
 
 def cosine_similarity_arrow():

@@ -42,14 +42,6 @@ def fingerprint(col: str = "text") -> F.Column:
     return F.md5(normalized_text(col))
 
 
-def hex_hash(col_expr: F.Column, salt: str, bits_hex: int = 12) -> F.Column:
-    """Portable 48-bit integer hash: conv(substr(md5(salt||x),1,12),16,10).
-    Identical in DuckDB as CAST('0x'||substr(md5(...),1,12) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col_expr)), 1, bits_hex), 16, 10
-    ).cast("long")
-
-
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, fp, canonical_id, is_duplicate): canonical = min id per
     fingerprint group."""
@@ -297,25 +289,6 @@ def simhash_banded_pairs(
         .distinct()
     )
     return cand
-
-
-def hamming_pairs(sig: DataFrame, max_dist: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance via cross join —
-    bounded candidate sets only (the correctness twin of
-    simhash_banded_pairs, which is the unbounded-input scale path)."""
-    a = sig.alias("a")
-    b = sig.alias("b")
-    xor = F.expr("a.simhash ^ b.simhash")
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_dist)
-    )
 
 
 def _unionfind_labels(pairs: DataFrame) -> DataFrame:

@@ -104,29 +104,6 @@ def train_linear_probe(
     return w
 
 
-def train_linear_probe_np(X, y, steps: int = 6, lr: float = 0.5,
-                          quant: int = QUANT) -> list[float]:
-    """Independent NumPy/pure-Python replay (tests/oracles): per-row
-    Python floor on the same quantized contributions, summed as Python
-    ints — a genuinely different execution path that must reproduce
-    the engine's weights bit-for-bit."""
-    import math
-
-    n, d = len(X), len(X[0])
-    w = [0.0] * d
-    for _ in range(steps):
-        g = [0] * d
-        for xi, yi in zip(X, y):
-            acc = xi[0] * w[0]
-            for xj, wj in zip(xi[1:], w[1:]):
-                acc = acc + xj * wj
-            r = acc - yi
-            for j in range(d):
-                g[j] += math.floor(xi[j] * r * float(quant) + 0.5)
-        w = [wj - lr * (gj / (quant * n)) for wj, gj in zip(w, g)]
-    return w
-
-
 def probe_score_col(feature_cols: list[str], w: list[float]) -> Column:
     """Inference: the trained score as a pure-JVM expression (same
     left-fold)."""

@@ -16,11 +16,21 @@ shared cross-engine tie rule, NOTES.md #27), the group centroid is
 represented by the element-wise integer SUM (same direction as the
 mean — cosine is scale-invariant, so dividing by n is skipped and the
 arithmetic stays integer), and every dot product is an exact int64.
-The only float ops are two sqrt and one division, both IEEE-754
-correctly rounded — bit-identical in Spark, NumPy, and DuckDB.
-Overflow headroom: |dot(xq, S)| <= d * scale^2 * n_group, inside
-int64/2^53-double territory until n_group ~ 1.4e8 per group at
-d=64, scale=1000 (assert below).
+The only float ops are the three int64 -> double casts, two sqrt and
+one division, all IEEE-754 round-to-nearest-even — bit-identical in
+Spark, NumPy, and DuckDB. Past 2^53 a cast is no longer exact, but it
+rounds the same way in all three (Java's long-to-double, C's on IEEE
+hardware; checked on 4,008 values above 2^53, ties included), so the
+engines still agree bit for bit.
+
+Bound: the integer ops (the element-wise centroid sums sv, the group
+norm ns = sum(sv^2), the per-row dxs = xq.S and nx = xq.xq) run in
+int64 under the session's ANSI mode (spark.sql.ansi.enabled, the
+Spark 4 default), so an overflow raises ARITHMETIC_OVERFLOW rather
+than returning a wrapped score. ns = |S|^2 <= (n_group * max|xq|)^2
+overflows first: for unit-norm embeddings |xq| <= scale + sqrt(d)/2,
+so at scale=1000 no group under ~3.0e6 rows can raise, and only a
+group whose vectors all point one way gets there.
 
 Spark shape at 10^12 rows: posexplode -> two-level aggregation
 (map-side combine bounds the shuffle to groups x d rows per
@@ -36,10 +46,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# n_group * scale^2 * dim must stay < 2^53 for the double division to
-# see exact integers; 2^53 / (1000^2 * 64) ~ 1.4e8 rows per group.
-MAX_GROUP_ROWS = (1 << 53) // (1000 * 1000 * 64)
 
 
 def _quantize(col, scale: int):

@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..functions.text import embed_udf
@@ -29,6 +30,38 @@ from ..operators.longtail import lt_scores
 from ..operators.selection import select_subset
 from ..operators.votes import aggregate_votes, curate_scores, vote_epochs
 from .pipeline import rule_decisions, transcript_features
+
+
+class InputSchemaError(ValueError):
+    """A clips/scores column that curation_pipeline reads is missing or
+    has the wrong type."""
+
+
+_KINDS = {
+    "string": (T.StringType,),
+    "binary": (T.BinaryType,),
+    # any width: the fixtures carry int32 durations and int8 scores
+    "integral": (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+}
+_INPUT_COLUMNS = {
+    "clips": {"clip_id": "string", "transcript": "string", "codec": "string",
+              "bytes": "binary", "sr_hz": "integral", "dur_ms": "integral"},
+    "scores": {"clip_id": "string", "rater": "string", "raw_score": "integral"},
+}
+
+
+def check_input(table: str, df: DataFrame) -> None:
+    """Raise InputSchemaError on the first column of `table` that `df`
+    lacks or holds under another type; extra columns pass. Reads only
+    the analyzed schema, so it runs no Spark job."""
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    for column, kind in _INPUT_COLUMNS[table].items():
+        found = fields.get(column)
+        if not isinstance(found, _KINDS[kind]):
+            found = "no such column" if found is None else found.simpleString()
+            raise InputSchemaError(
+                f"{table}.{column}: expected {kind}, found {found}"
+            )
 
 
 def embed_candidates(candidates: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -235,7 +268,12 @@ def curation_pipeline(
     (None) gives one input scan per stage with stage-level resume;
     1 gives the finest failure granularity (a crash loses at most one
     wave) at the cost of one scan per wave.
+
+    Raises InputSchemaError, before any Spark job, when `clips` or
+    `scores` lacks a column it reads or holds it under another type.
     """
+    check_input("clips", clips)
+    check_input("scores", scores)
     cfg = cfg or PipelineConfig()
 
     _rules_stage = make_rules_stage(cfg)

@@ -1,75 +1,11 @@
-"""Report tables — the reference's pickled `Report` object
-(score_curation/docta/core/report.py:1-28) re-expressed as small
-DataFrames (SURVEY.md §1.2: 'T as long-form (from_score, to_score,
-prob) table'), plus the multi-rater fan-out (diagnose.sh:10-26 runs
-one diagnosis per rating model)."""
+"""Report tables — the reference's per-rater diagnosis
+(score_curation/docta/core/report.py:1-28, diagnose.sh:10-26 runs one
+diagnosis per rating model) re-expressed as small DataFrames."""
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..config import NUM_CLASSES, PipelineConfig
-from ..operators.hoc import HocResult, t_given_noisy
-
-
-def hoc_report_df(spark: SparkSession, rater: str, res: HocResult) -> DataFrame:
-    """Long-form transition matrix: (rater, from_score, to_score, prob,
-    p_clean, p_noisy) — FIXTURES.md golden_T shape."""
-    rows = []
-    for i in range(NUM_CLASSES):
-        for j in range(NUM_CLASSES):
-            rows.append(
-                (
-                    rater,
-                    i,
-                    j,
-                    round(float(res.T[i, j]), 6),
-                    round(float(res.p_clean[i]), 6),
-                    round(float(res.p_noisy[i]), 6),
-                )
-            )
-    return spark.createDataFrame(
-        rows,
-        "rater string, from_score int, to_score int, prob double, "
-        "p_clean double, p_noisy double",
-    )
-
-
-def calibrate_all_raters(
-    spark: SparkSession,
-    pool_emb: np.ndarray,
-    pool_ids: np.ndarray,
-    scores: DataFrame,
-    cfg: PipelineConfig | None = None,
-    raters: list[str] | None = None,
-) -> dict:
-    """Run HOC + votes + curation per rater (the reference fans one
-    diagnosis per rating model across GPUs; here it is a driver loop
-    over Spark jobs — each job is internally parallel, and the loop
-    count is the number of raters, a constant).
-
-    Returns {"t_report": DataFrame, "curated": {rater: DataFrame},
-             "noise_rates": {rater: ndarray}}."""
-    from .curation import calibrate_rater
-
-    cfg = cfg or PipelineConfig()
-    if raters is None:
-        raters = [
-            r["rater"]
-            for r in scores.select("rater").distinct().orderBy("rater").collect()
-        ]
-    t_report: DataFrame | None = None
-    curated: dict[str, DataFrame] = {}
-    noise_rates: dict[str, np.ndarray] = {}
-    for rater in raters:
-        res, cur = calibrate_rater(spark, pool_emb, pool_ids, scores, rater, cfg)
-        curated[rater] = cur
-        noise_rates[rater] = 1.0 - np.diag(t_given_noisy(res))
-        rep = hoc_report_df(spark, rater, res)
-        t_report = rep if t_report is None else t_report.unionByName(rep)
-    return {"t_report": t_report, "curated": curated, "noise_rates": noise_rates}
 
 
 def rater_agreement_report(scores: DataFrame) -> DataFrame:
@@ -91,14 +27,3 @@ def rater_agreement_report(scores: DataFrame) -> DataFrame:
         "clip_id", "rater", F.col("raw_score").cast("int").alias("label")
     )
     return pairwise_rater_agreement(labeled).orderBy("rater_a", "rater_b")
-
-
-def score_error_table(curated: DataFrame) -> DataFrame:
-    """The reference's detection.score_error output (report.py:14-16):
-    candidates ranked by vote-average noisiness (detect.py:74
-    argsort desc)."""
-    return (
-        curated.filter(F.col("is_corrupted"))
-        .select("clip_id", "raw_score", "noisy_avg", "suggested_score", "confidence")
-        .orderBy(F.desc("noisy_avg"), F.asc("clip_id"))
-    )

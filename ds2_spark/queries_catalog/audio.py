@@ -326,7 +326,7 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groups. All arithmetic stays within int64 in both engines.
     # var is CLAMPED mod 100: the perturbation stays <= 3960, keeping
     # sample 0 within int16 for ANY event_id (unclamped, event_id >
-    # ~3.3M would overflow _synth_pcm16_hex's 4-hex-digit int16
+    # ~3.3M would overflow the 4-hex-digit int16 sample
     # encoding and silently diverge from the closed-form oracle at
     # large SFs). 100 variants per group is far more than any SF's
     # group population, so the planted structure is unchanged.

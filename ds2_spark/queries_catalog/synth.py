@@ -21,24 +21,13 @@ def _le16_hex(v):
     return F.concat(F.substring(h, 3, 2), F.substring(h, 1, 2))
 
 
-def _synth_pcm16_hex(n, sample):
-    """PCM16-LE payload synthesized IN SPARK SQL EXPRESSIONS from a
-    closed-form per-sample function `sample(i) -> Column` (n samples),
-    so a DuckDB oracle can recompute identical bytes/energies from the
-    same formula while Spark exercises real binary decode kernels."""
-    hexstr = F.array_join(
-        F.transform(F.sequence(F.lit(0), n - 1), lambda i: _le16_hex(sample(i))),
-        "",
-    )
-    return F.to_binary(hexstr, F.lit("hex"))
-
-
 def _synth_payload_np(fn):
     """Arrow-vectorized synthesis twin (guide §4.2): the closed-form
     per-sample payload formula runs as ONE NumPy broadcast per Arrow
     batch instead of n interpreted-HOF expression evaluations per row
-    (`_synth_pcm16_hex` stays as the documented SQL-expression form;
-    this produces BIT-IDENTICAL bytes — the oracle SQL is unchanged).
+    (an array_join of per-sample `_le16_hex` hex strings decoded with
+    to_binary); the bytes are BIT-IDENTICAL to that SQL-expression form,
+    so the oracle SQL is unchanged.
 
     `fn(ev, i)` receives the batch's event ids as an int64 column
     vector (k, 1) and sample indices as an int64 row vector

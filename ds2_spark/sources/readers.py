@@ -24,23 +24,11 @@ CLIPS_SCHEMA = T.StructType(
     ]
 )
 
-SCORES_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType(), False),
-        T.StructField("rater", T.StringType(), False),
-        T.StructField("raw_score", T.ByteType(), True),
-    ]
-)
-
 
 def read_clips(spark: SparkSession, path: str) -> DataFrame:
     """Primary input table. With Iceberg jars present this becomes
     spark.read.format('iceberg'); parquet layout is identical."""
     return spark.read.schema(CLIPS_SCHEMA).parquet(path)
-
-
-def read_scores(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(SCORES_SCHEMA).parquet(path)
 
 
 def read_csv_table(

@@ -1,20 +1,18 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the events and clips tables.
 
-The reference is a pure batch pipeline (SURVEY.md §2.10) — the
-engine's exact-resume posture mirrors Structured Streaming's
-commit-log pattern via sources/lineage.py. This module demonstrates
-the genuine streaming surface for users who feed clips/events
-incrementally:
-
-  - windowed_event_counts: tumbling event-time window + watermark agg
-  - run_stream_once: drive a parquet-directory stream to completion
-    synchronously (memory sink) — the local smoke-test harness
-
-The same transformations run identically in batch (see
-queries_catalog.relational.q_time_buckets, the batch twin of the windowed agg).
+The reference is a pure batch pipeline (SURVEY.md §2.10); the engine's
+exact resume mirrors Structured Streaming's commit log via
+sources/lineage.py. Every transform here takes a DataFrame and runs
+unchanged on a batch or a streaming one, which the stream==batch tests
+pin. `drain` runs any streaming DataFrame to completion through a
+memory sink; `run_filter_to_parquet` is the checkpointed, exactly-once
+parquet sink. The batch twin of the windowed agg is
+queries_catalog.relational.q_time_buckets.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,26 +49,25 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
     )
 
 
-def run_stream_once(spark: SparkSession, events_dir: str, query_name: str = "ev_out") -> DataFrame:
-    """Drive a file-source stream to completion (one pass over the
-    directory) and return the materialized result."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-    )
-    agg = windowed_event_counts(stream)
+def drain(stream: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a streaming DataFrame over everything its sources hold now,
+    through a memory sink under a fresh table name, and return the
+    sink's rows. `output_mode` is the query's own: "append" for
+    per-row and watermarked plans, "complete" for a re-emitted
+    aggregate, "update" for a stateful operator (the sink then keeps
+    every update, not only the last)."""
+    name = f"drain_{uuid.uuid4().hex}"
     q = (
-        agg.writeStream.outputMode("complete")
+        stream.writeStream.outputMode(output_mode)
         .format("memory")
-        .queryName(query_name)
+        .queryName(name)
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return stream.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 def running_type_stats(events: DataFrame) -> DataFrame:
@@ -110,41 +107,6 @@ def running_type_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_stream_once(
-    spark: SparkSession, events_dir: str, query_name: str = "ev_state"
-) -> DataFrame:
-    """Drive the stateful running-stats stream over a file source one
-    micro-batch per file (maxFilesPerTrigger=1 forces state to carry
-    across triggers) and return the LAST update per group."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    agg = running_type_stats(stream)
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # memory sink in update mode appends every emitted update; the
-    # final state per group is the row with the largest n
-    out = spark.sql(f"SELECT * FROM {query_name}")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("n"))
-    return (
-        out.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
-
-
 # ---------------- streaming quality filter (clips stream) ----------------
 
 CLIPS_STREAM_SCHEMA = T.StructType(
@@ -172,169 +134,6 @@ def streaming_rule_decisions(clips_stream: DataFrame, cfg=None) -> DataFrame:
     return make_rules_stage(cfg or PipelineConfig())(clips_stream).select(
         "clip_id", "lang", "reason", "keep_rules", "transcript_scrubbed"
     )
-
-
-def run_codec_energy_stream_once(
-    spark: SparkSession, clips_dir: str, query_name: str = "codec_energy"
-) -> DataFrame:
-    """Incremental-ingest twin of the bytes-decoding audio stage:
-    `audio_codec_energy` (PCM16 / G.711 / IMA-ADPCM / FLAC real
-    decode) over a micro-batched clips file stream. The operator is a
-    stateless mapInPandas over a pruned projection, so the identical
-    Arrow-batched decode plan runs under Structured Streaming
-    unchanged — new audio landing in the table decodes as it arrives,
-    with refusal semantics (unknown codec, NULL/corrupt payload ->
-    decoded_ok=false) byte-for-byte equal to the batch run, pinned in
-    tests over a mixed-codec corpus."""
-    from ..operators.audio import audio_codec_energy
-
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
-    )
-    out = audio_codec_energy(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_trim_stream_once(
-    spark: SparkSession,
-    clips_dir: str,
-    query_name: str = "clip_trim",
-    frame_samples: int = 4,
-    energy_threshold: int = 100,
-) -> DataFrame:
-    """Incremental twin of the bytes-TRANSFORMING audio stage:
-    `audio_trim` (leading/trailing silence removal, trimmed bytes
-    emitted partition-local) over a micro-batched clips file stream.
-    Like the decode twin above it is a stateless mapInPandas over a
-    pruned projection, so the identical Arrow plan — including the
-    binary OUTPUT column — runs under Structured Streaming unchanged;
-    clips landing in the table are edge-trimmed as they arrive."""
-    from ..operators.audio import audio_trim
-
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
-    )
-    out = audio_trim(
-        stream, frame_samples=frame_samples, energy_threshold=energy_threshold
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_pq_encode_stream_once(
-    spark: SparkSession,
-    emb_dir: str,
-    codebooks,
-    query_name: str = "pq_codes",
-    quantize_scale: int = 1000,
-) -> DataFrame:
-    """Incremental twin of the PQ index build: `pq_encode`
-    (operators/pq.py) over a micro-batched embeddings file stream —
-    new vectors are compressed to codes as they land, so the ANN
-    index relation stays current without full rebuilds. Stateless
-    Arrow mapInPandas over a pruned projection: the identical encode
-    plan runs under Structured Streaming unchanged."""
-    from ..operators.pq import pq_encode
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(emb_dir)
-    )
-    out = pq_encode(stream, codebooks, quantize_scale=quantize_scale)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_bpe_encode_stream_once(
-    spark: SparkSession,
-    docs_dir: str,
-    merges,
-    query_name: str = "bpe_tokens",
-) -> DataFrame:
-    """Incremental twin of corpus tokenization: `bpe_encode`
-    (operators/bpe.py) over a micro-batched documents file stream —
-    newly-landed docs get token counts/hashes under a FROZEN merge
-    table (the production pattern: the tokenizer is versioned and
-    pinned while the corpus grows). Stateless Arrow mapInPandas over
-    the pruned (doc_id, text) projection; the identical encode plan
-    runs under Structured Streaming unchanged."""
-    from ..operators.bpe import bpe_encode
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(docs_dir)
-    )
-    out = bpe_encode(stream, merges)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_rules_stream_once(
-    spark: SparkSession, clips_dir: str, query_name: str = "clip_rules", cfg=None
-) -> DataFrame:
-    """Drive the streaming quality filter over a parquet clips
-    directory (micro-batched file source) to completion; append mode —
-    pure per-row decisions, no state, no watermark needed."""
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
-    )
-    dec = streaming_rule_decisions(stream, cfg)
-    q = (
-        dec.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def session_event_counts(events: DataFrame, gap: str = "12 hours",
@@ -365,38 +164,6 @@ def session_event_counts(events: DataFrame, gap: str = "12 hours",
     )
 
 
-def run_session_stream_once(
-    spark: SparkSession,
-    events_dir: str,
-    query_name: str = "ev_sessions",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Drive the session-window stream over a file source in several
-    micro-batches (sessions must merge ACROSS triggers) and return the
-    final session table. NOTE: the file source picks files by
-    modification time, not event time — when replaying a directory
-    whose files are not in event-time order, pass a watermark wider
-    than the replay's disorder or whole late files are (correctly)
-    dropped as late data."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
-    )
-    agg = session_event_counts(stream, watermark=watermark)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup with BOUNDED state: first occurrence of
     each event_id within the watermark horizon passes, replays are
@@ -417,35 +184,6 @@ def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFr
             ["event_id"]
         )
     return events.dropDuplicates(["event_id"])
-
-
-def run_dedup_stream_once(
-    spark: SparkSession,
-    events_dir: str,
-    query_name: str = "ev_dedup",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Drive the dedup stream over a file-source replay (several
-    micro-batches, so replayed duplicates arrive in LATER triggers
-    than their originals and must be caught by the state store, not
-    by intra-batch dedup)."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
-    )
-    q = (
-        dedup_events_stream(stream, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def interval_join_streams(
@@ -491,38 +229,6 @@ def interval_join_streams(
     )
 
 
-def run_interval_join_once(
-    spark: SparkSession,
-    probes_dir: str,
-    quotes_dir: str,
-    query_name: str = "ev_ijoin",
-    lookback: str = "2 hours",
-    watermark: str = "3650 days",
-) -> DataFrame:
-    """Drive the stream-stream join over two file-source replays in
-    multiple micro-batches (matches must form ACROSS batches from
-    buffered state, not within one batch)."""
-    mk = lambda d: (  # noqa: E731
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(d)
-    )
-    joined = interval_join_streams(
-        mk(probes_dir), mk(quotes_dir), lookback=lookback, watermark=watermark
-    )
-    qr = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def enrich_events_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of events joins
     the (small, slowly-changing) static dim on event_type — Spark
@@ -541,29 +247,6 @@ def enrich_events_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
         (F.round(F.col("value") * 100).cast("long")
          * F.coalesce("weight", F.lit(0))).alias("weighted_cents"),
     )
-
-
-def run_enrich_stream_once(
-    spark: SparkSession, events_dir: str, dim: DataFrame,
-    query_name: str = "enrich_out",
-) -> DataFrame:
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(events_dir)
-    )
-    out = enrich_events_stream(stream, dim)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def master_chain(clips: DataFrame) -> DataFrame:
@@ -586,30 +269,25 @@ def master_chain(clips: DataFrame) -> DataFrame:
     return audio_gain_normalize(comp, target_peak=24000)
 
 
-def run_master_stream_once(
-    spark: SparkSession, clips_dir: str, query_name: str = "clip_master"
-) -> DataFrame:
-    """Incremental twin of the full mastering chain: three chained
-    bytes-in/bytes-out Arrow stages run unchanged under Structured
-    Streaming (all stateless, so micro-batch boundaries cannot change
-    any output byte)."""
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
+def web_ingest(docs: DataFrame) -> DataFrame:
+    """The web-ingest ladder over (doc_id, url, html): URL
+    canonicalization (functions/urls) and HTML extraction
+    (functions/htmltext), so every downstream consumer (exact dedup,
+    domain stats, quality filters) reads one agreed form. Every step
+    is a stateless pure-JVM projection (regexp chains + bounded HOF
+    entity folds; no watermark, no state store), so a stream of
+    newly-crawled pages gets the same rows as the batch plan."""
+    from ..functions.htmltext import strip_html_col
+    from ..functions.urls import url_parts
+
+    p = url_parts("url")
+    return docs.select(
+        "doc_id",
+        p["valid"].alias("url_valid"),
+        p["canonical"].alias("canonical"),
+        p["domain"].alias("domain"),
+        strip_html_col("html").alias("text_clean"),
     )
-    out = master_chain(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_filter_to_parquet(
@@ -643,47 +321,3 @@ def run_filter_to_parquet(
         .start()
     )
     q.awaitTermination()
-
-
-def run_web_ingest_stream_once(
-    spark: SparkSession,
-    docs_dir: str,
-    query_name: str = "web_ingest",
-) -> DataFrame:
-    """Incremental twin of the web-ingest ladder: URL canonicalization
-    (functions/urls) + HTML extraction (functions/htmltext) over a
-    micro-batched (doc_id, url, html) file stream — newly-crawled
-    pages get their dedup key (canonical URL), registrable domain, and
-    visible text as they land, identical to the batch plan because
-    every step is a stateless pure-JVM projection (regexp chains +
-    bounded HOF entity folds; no watermark, no state store). This is
-    the production shape: canonicalize/strip at INGEST so every
-    downstream consumer (exact dedup, domain stats, quality filters)
-    reads one agreed form."""
-    from ..functions.htmltext import strip_html_col
-    from ..functions.urls import url_parts
-
-    stream = (
-        spark.readStream.schema("doc_id long, url string, html string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(docs_dir)
-    )
-    p = url_parts("url")
-    out = stream.select(
-        "doc_id",
-        p["valid"].alias("url_valid"),
-        p["canonical"].alias("canonical"),
-        p["domain"].alias("domain"),
-        strip_html_col("html").alias("text_clean"),
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

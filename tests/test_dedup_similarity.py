@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from ds2_spark.operators.dedup import (
     exact_duplicates,
-    hamming_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -18,6 +17,8 @@ from ds2_spark.operators.similarity import (
     lsh_neardup_pairs,
     lsh_topk,
 )
+
+from .oracle.twins import hamming_pairs
 
 
 @pytest.fixture(scope="module")
@@ -845,6 +846,30 @@ def test_prototype_scores_matches_numpy(spark):
             assert r["outlier_rank"] == rk
             assert r["is_outlier"] == int(rk <= 5)
 
+
+
+def test_prototype_scores_overflow_raises(spark):
+    """int64 overflow in a group's quantized sums raises under the
+    session's ANSI mode instead of returning a wrapped score. Two
+    1-d rows of 2.2e6 quantize to 2.2e9 each: every row's own square
+    (4.84e18) fits int64, the group's squared sum (4.4e9)^2 does not.
+    Half that value stays inside and scores normally."""
+    from pyspark.errors import ArithmeticException
+
+    from ds2_spark.operators.prototypes import prototype_scores
+
+    def scores(x):
+        df = spark.createDataFrame(
+            [(1, 0, [x]), (2, 0, [x])],
+            "vec_id long, label int, embedding array<float>",
+        )
+        return prototype_scores(
+            df, group="label", id_col="vec_id", dim=1, outlier_k=1
+        ).collect()
+
+    assert [r["proto_cos"] for r in scores(1.1e6)] == [1.0, 1.0]
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        scores(2.2e6)
 
 def test_pagerank_int_matches_python_replay(spark):
     """Integer PageRank: exact parity with a pure-Python replay on a

@@ -19,13 +19,8 @@ import random
 
 import duckdb
 
-from ds2_spark.functions.htmltext import strip_html_py, strip_html_sql
-from ds2_spark.functions.scrub import (
-    scrub_cc_py,
-    scrub_cc_sql,
-    scrub_py,
-    scrub_sql,
-)
+from ds2_spark.functions.htmltext import strip_html_sql
+from ds2_spark.functions.scrub import scrub_cc_sql, scrub_py, scrub_sql
 from ds2_spark.functions.text import (
     SANITIZE_FW_FROM,
     SANITIZE_FW_TO,
@@ -44,7 +39,9 @@ def sanitize_sql(expr: str) -> str:
         f" '{SANITIZE_SPACE_CLASS}', ' ', 'g'),"
         f" '{SANITIZE_FW_FROM}', '{fw_to}')"
     )
-from ds2_spark.functions.urls import url_parts_py, url_parts_sql
+from ds2_spark.functions.urls import url_parts_sql
+
+from .oracle.twins import scrub_cc_py, strip_html_py, url_parts_py
 
 _WORDS = ["alpha", "beta", "kernel", "clip", "transcript", "Ово", "漢字",
           "café", "data", "zorgblat07", "zorgblat99x"]

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 from ds2_spark.functions.htmltext import (
     html_text_ratio_cols,
     strip_html_col,
-    strip_html_py,
     strip_html_sql,
 )
+
+from .oracle.twins import strip_html_py
 
 CASES = [
     "<html><head><title>T</title><style>p{c:red}</style></head>"

@@ -14,9 +14,10 @@ from ds2_spark.functions.scrub import (
     CC_TAG,
     luhn_valid_py,
     scrub_cc_col,
-    scrub_cc_py,
     scrub_cc_sql,
 )
+
+from .oracle.twins import scrub_cc_py
 
 CASES = [
     # valid cards in every separator style

@@ -14,8 +14,9 @@ from ds2_spark.operators.probe import (
     probe_dot_sql,
     probe_score_col,
     train_linear_probe,
-    train_linear_probe_np,
 )
+
+from .oracle.twins import train_linear_probe_np
 
 
 def _rows(n=2000):

@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 from ds2_spark.functions.scripts import (
     script_count_cols,
     script_count_sql,
-    script_counts_py,
 )
+
+from .oracle.twins import script_counts_py
 
 CASES = [
     "pure latin text here with words",

@@ -1,7 +1,6 @@
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from ds2_spark.functions.scores import compress_score, parse_rating_json
@@ -13,7 +12,18 @@ from ds2_spark.sources.readers import (
     read_jsonl,
     write_json,
 )
-from ds2_spark.streaming.events import run_stream_once, windowed_event_counts
+from ds2_spark.streaming.events import EVENTS_SCHEMA, drain, windowed_event_counts
+
+
+def _file_stream(spark, path, schema=EVENTS_SCHEMA, per_trigger=2):
+    """A parquet file-source stream over `path` that reads at most
+    `per_trigger` files per micro-batch, so a directory of several
+    files replays as several triggers."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", per_trigger)
+        .parquet(path)
+    )
 
 
 def test_read_clips_schema(spark, fixture_paths):
@@ -90,7 +100,11 @@ def test_streaming_windowed_counts_match_batch(spark, tmp_path):
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     src.repartition(6).write.mode("overwrite").parquet(events_dir)
 
-    stream_out = run_stream_once(spark, events_dir, "ev_test")
+    # complete mode: the sink holds the whole re-emitted aggregate
+    stream_out = drain(
+        windowed_event_counts(_file_stream(spark, events_dir, per_trigger=4)),
+        "complete",
+    )
     batch_out = windowed_event_counts(spark.read.parquet(events_dir))
     key = lambda r: (str(r["window_start"]), r["event_type"])
     got = {key(r): (r["n"], r["sum_value"]) for r in stream_out.collect()}
@@ -164,7 +178,9 @@ def test_stateful_stream_matches_batch(spark, tmp_path):
     import glob
     import shutil
 
-    from ds2_spark.streaming.events import run_stateful_stream_once
+    from pyspark.sql import Window
+
+    from ds2_spark.streaming.events import running_type_stats
 
     events_dir = str(tmp_path / "ev_state")
     os.makedirs(events_dir)
@@ -176,9 +192,21 @@ def test_stateful_stream_matches_batch(spark, tmp_path):
         f = glob.glob(f"{events_dir}_tmp{i}/part-*.parquet")[0]
         shutil.copy(f, os.path.join(events_dir, f"batch_{i}.parquet"))
 
+    # one file per trigger forces the state to cross triggers; the
+    # update-mode sink keeps every emitted update, and the final state
+    # per group is the row with the largest n
+    updates = drain(
+        running_type_stats(_file_stream(spark, events_dir, per_trigger=1)),
+        "update",
+    )
+    last = Window.partitionBy("event_type").orderBy(F.desc("n"))
+    final = (
+        updates.withColumn("_rk", F.row_number().over(last))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk")
+    )
     got = {
-        r["event_type"]: (r["n"], r["sum_value"])
-        for r in run_stateful_stream_once(spark, events_dir).collect()
+        r["event_type"]: (r["n"], r["sum_value"]) for r in final.collect()
     }
     exp = {
         r["event_type"]: (r["n"], round(r["s"], 2))
@@ -201,14 +229,17 @@ def test_streaming_quality_filter_matches_batch(spark, clips_df, tmp_path):
     from ds2_spark.operators.audio import audio_sanity_fast
     from ds2_spark.streaming.events import (
         CLIPS_STREAM_SCHEMA,
-        run_rules_stream_once,
+        streaming_rule_decisions,
     )
 
     clips_dir = str(tmp_path / "clips_stream")
     cols = [f.name for f in CLIPS_STREAM_SCHEMA.fields]
     clips_df.select(*cols).repartition(5).write.mode("overwrite").parquet(clips_dir)
 
-    stream_out = run_rules_stream_once(spark, clips_dir, "rules_test")
+    # append mode: pure per-row decisions, no state, no watermark needed
+    stream_out = drain(streaming_rule_decisions(
+        _file_stream(spark, clips_dir, CLIPS_STREAM_SCHEMA)
+    ))
     batch_src = spark.read.parquet(clips_dir)
     batch_out = rule_decisions(
         transcript_features(batch_src),
@@ -233,10 +264,7 @@ def test_streaming_sessions_match_batch_operator(spark, tmp_path):
     == the batch gap-and-island operator (operators/timeseries) on the
     same events — two independent sessionization implementations."""
     from ds2_spark.operators.timeseries import epoch_micros, session_stats
-    from ds2_spark.streaming.events import (
-        run_session_stream_once,
-        session_event_counts,
-    )
+    from ds2_spark.streaming.events import session_event_counts
 
     events_dir = str(tmp_path / "sess_ev")
     os.makedirs(events_dir)
@@ -249,12 +277,16 @@ def test_streaming_sessions_match_batch_operator(spark, tmp_path):
     batch_df = spark.read.parquet(events_dir)
 
     gap_us = 12 * 3600 * 1_000_000
-    # watermark wider than the data span: the file source replays
+    # several micro-batches, so sessions must merge ACROSS triggers.
+    # Watermark wider than the data span: the file source replays
     # files in modification-time order (not event-time), so a tight
     # watermark would — correctly — drop whole out-of-order files;
     # late-data eviction itself is covered by the windowed-count test
-    stream_out = run_session_stream_once(spark, events_dir,
-                                         watermark="3650 days")
+    stream_out = drain(
+        session_event_counts(_file_stream(spark, events_dir),
+                             watermark="3650 days"),
+        "complete",
+    )
     batch_out = session_stats(batch_df, gap_us=gap_us, tiebreak="event_id")
 
     got = {
@@ -284,10 +316,7 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
     state store across micro-batches."""
     from pyspark.sql import functions as F
 
-    from ds2_spark.streaming.events import (
-        dedup_events_stream,
-        run_dedup_stream_once,
-    )
+    from ds2_spark.streaming.events import dedup_events_stream
 
     events_dir = str(tmp_path / "dedup_ev")
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet").filter(
@@ -299,7 +328,11 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
         "append"
     ).parquet(events_dir)
 
-    out = run_dedup_stream_once(spark, events_dir, watermark="3650 days")
+    # several micro-batches, so replayed duplicates arrive in LATER
+    # triggers than their originals and must be caught by the state
+    # store, not by intra-batch dedup
+    out = drain(dedup_events_stream(_file_stream(spark, events_dir),
+                                    watermark="3650 days"))
     got = sorted(r["event_id"] for r in out.collect())
     exp = sorted(
         r["event_id"]
@@ -345,10 +378,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     replays == the same range join run in batch: identical
     (probe, quote) match sets, with matches forming across
     micro-batch boundaries from buffered state."""
-    from ds2_spark.streaming.events import (
-        interval_join_streams,
-        run_interval_join_once,
-    )
+    from ds2_spark.streaming.events import interval_join_streams
 
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet").filter(
         F.col("event_id") < 600
@@ -359,7 +389,12 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     probes.repartitionByRange(5, "ts").write.parquet(pd_dir)
     quotes.repartitionByRange(5, "ts").write.parquet(qd_dir)
 
-    stream_out = run_interval_join_once(spark, pd_dir, qd_dir)
+    # several micro-batches per side, so matches must form ACROSS
+    # batches from buffered state, not within one batch
+    stream_out = drain(interval_join_streams(
+        _file_stream(spark, pd_dir), _file_stream(spark, qd_dir),
+        watermark="3650 days",
+    ))
     got = {
         (r["p_id"], r["q_id"]) for r in stream_out.collect()
     }
@@ -381,7 +416,7 @@ def test_streaming_codec_decode_matches_batch(spark, tmp_path):
     import numpy as np
 
     from ds2_spark.operators.audio import audio_codec_energy
-    from ds2_spark.streaming.events import run_codec_energy_stream_once
+    from ds2_spark.streaming.events import CLIPS_STREAM_SCHEMA
     from .test_flac import _frame, _streaminfo, _sub_verbatim
 
     rng = np.random.default_rng(33)
@@ -412,7 +447,9 @@ def test_streaming_codec_decode_matches_batch(spark, tmp_path):
     clips_dir = str(tmp_path / "codec_stream")
     df.repartition(4).write.mode("overwrite").parquet(clips_dir)
 
-    stream_out = run_codec_energy_stream_once(spark, clips_dir, "codec_test")
+    stream_out = drain(audio_codec_energy(
+        _file_stream(spark, clips_dir, CLIPS_STREAM_SCHEMA)
+    ))
     batch_out = audio_codec_energy(spark.read.parquet(clips_dir))
     key = lambda r: (r["clip_id"], r["decoded_ok"], r["n_samples"],
                      r["abs_energy"], r["max_abs"])
@@ -432,7 +469,7 @@ def test_trim_stream_matches_batch(spark, tmp_path):
     import numpy as np
 
     from ds2_spark.operators.audio import audio_trim
-    from ds2_spark.streaming.events import run_trim_stream_once
+    from ds2_spark.streaming.events import CLIPS_STREAM_SCHEMA
 
     loud = np.array([60, -60, 60, -60], dtype="<i2").tobytes()
     quiet = np.array([5, -5, 5, -5], dtype="<i2").tobytes()
@@ -450,7 +487,10 @@ def test_trim_stream_matches_batch(spark, tmp_path):
     clips_dir = str(tmp_path / "trim_stream")
     df.repartition(3).write.mode("overwrite").parquet(clips_dir)
 
-    stream_out = run_trim_stream_once(spark, clips_dir, "trim_test")
+    stream_out = drain(audio_trim(
+        _file_stream(spark, clips_dir, CLIPS_STREAM_SCHEMA),
+        frame_samples=4, energy_threshold=100,
+    ))
     batch_out = audio_trim(
         spark.read.parquet(clips_dir), frame_samples=4, energy_threshold=100
     )
@@ -542,10 +582,7 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
     """Stream-static broadcast join: enrichment of a micro-batched
     event stream with a static dim equals the batch join on the same
     data (multi-trigger replay — 6 files, 3 per trigger)."""
-    from ds2_spark.streaming.events import (
-        enrich_events_stream,
-        run_enrich_stream_once,
-    )
+    from ds2_spark.streaming.events import enrich_events_stream
 
     events_dir = str(tmp_path / "ev_enrich")
     os.makedirs(events_dir)
@@ -557,7 +594,9 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
         "event_type string, weight int",
     )  # signup/error absent -> weight 0 via the left join
 
-    stream_out = run_enrich_stream_once(spark, events_dir, dim)
+    stream_out = drain(enrich_events_stream(
+        _file_stream(spark, events_dir, per_trigger=3), dim
+    ))
     batch_out = enrich_events_stream(spark.read.parquet(events_dir), dim)
     key = lambda r: r["event_id"]
     got = {key(r): (r["weight"], r["weighted_cents"]) for r in stream_out.collect()}
@@ -573,7 +612,7 @@ def test_master_chain_stream_matches_batch(spark, tmp_path):
     including the output payload bytes, across micro-batch boundaries."""
     import numpy as np
 
-    from ds2_spark.streaming.events import master_chain, run_master_stream_once
+    from ds2_spark.streaming.events import CLIPS_STREAM_SCHEMA, master_chain
 
     rng = np.random.default_rng(11)
     rows = []
@@ -589,7 +628,11 @@ def test_master_chain_stream_matches_batch(spark, tmp_path):
         5
     ).write.mode("overwrite").parquet(clips_dir)
 
-    stream_out = run_master_stream_once(spark, clips_dir)
+    # all three stages are stateless, so micro-batch boundaries cannot
+    # change any output byte
+    stream_out = drain(master_chain(
+        _file_stream(spark, clips_dir, CLIPS_STREAM_SCHEMA)
+    ))
     batch_out = master_chain(spark.read.parquet(clips_dir))
 
     def snap(df):
@@ -655,7 +698,6 @@ def test_pq_encode_stream_matches_batch(spark, tmp_path):
     import numpy as np
 
     from ds2_spark.operators.pq import pq_encode, pq_train_codebooks
-    from ds2_spark.streaming.events import run_pq_encode_stream_once
 
     rng = np.random.default_rng(41)
     base = rng.normal(0, 1, size=(90, 16)).astype(np.float32)
@@ -668,11 +710,10 @@ def test_pq_encode_stream_matches_batch(spark, tmp_path):
     # several files -> several micro-batches (maxFilesPerTrigger=2)
     df.repartition(5).write.mode("overwrite").parquet(emb_dir)
 
+    stream = _file_stream(spark, emb_dir, "vec_id long, embedding array<float>")
     stream_out = {
         r["vec_id"]: list(r["codes"])
-        for r in run_pq_encode_stream_once(
-            spark, emb_dir, books, "pq_stream_test"
-        ).collect()
+        for r in drain(pq_encode(stream, books)).collect()
     }
     batch_out = {
         r["vec_id"]: list(r["codes"])
@@ -690,7 +731,6 @@ def test_bpe_encode_stream_matches_batch(spark, tmp_path):
     Arrow stage, per-partition word cache rebuilt per task without
     affecting results)."""
     from ds2_spark.operators.bpe import bpe_encode, train_bpe
-    from ds2_spark.streaming.events import run_bpe_encode_stream_once
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -700,11 +740,10 @@ def test_bpe_encode_stream_matches_batch(spark, tmp_path):
     # several files -> several micro-batches (maxFilesPerTrigger=2)
     docs.repartition(5).write.mode("overwrite").parquet(docs_dir)
 
+    stream = _file_stream(spark, docs_dir, "doc_id long, text string")
     stream_out = {
         r["doc_id"]: (r["n_tokens"], r["n_singles"], r["token_hash"])
-        for r in run_bpe_encode_stream_once(
-            spark, docs_dir, merges, "bpe_stream_test"
-        ).collect()
+        for r in drain(bpe_encode(stream, merges)).collect()
     }
     batch_out = {
         r["doc_id"]: (r["n_tokens"], r["n_singles"], r["token_hash"])
@@ -720,9 +759,7 @@ def test_web_ingest_stream_matches_batch(spark, tmp_path):
     (incl. invalid-URL NULL handling and entity-fold edge cases)."""
     from pyspark.sql import functions as F
 
-    from ds2_spark.functions.htmltext import strip_html_col
-    from ds2_spark.functions.urls import url_parts
-    from ds2_spark.streaming.events import run_web_ingest_stream_once
+    from ds2_spark.streaming.events import web_ingest
 
     base = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -744,24 +781,16 @@ def test_web_ingest_stream_matches_batch(spark, tmp_path):
     docs_dir = str(tmp_path / "web_stream")
     docs.repartition(5).write.mode("overwrite").parquet(docs_dir)
 
+    stream = _file_stream(spark, docs_dir, "doc_id long, url string, html string")
     stream_out = {
         r["doc_id"]: (r["url_valid"], r["canonical"], r["domain"],
                       r["text_clean"])
-        for r in run_web_ingest_stream_once(
-            spark, docs_dir, "web_ingest_test"
-        ).collect()
+        for r in drain(web_ingest(stream)).collect()
     }
-    p = url_parts("url")
     batch_out = {
         r["doc_id"]: (r["url_valid"], r["canonical"], r["domain"],
                       r["text_clean"])
-        for r in spark.read.parquet(docs_dir).select(
-            "doc_id",
-            p["valid"].alias("url_valid"),
-            p["canonical"].alias("canonical"),
-            p["domain"].alias("domain"),
-            strip_html_col("html").alias("text_clean"),
-        ).collect()
+        for r in web_ingest(spark.read.parquet(docs_dir)).collect()
     }
     assert stream_out == batch_out and len(stream_out) == 90
     # the ladder is non-vacuous in this fixture: valid and invalid

@@ -14,9 +14,10 @@ from ds2_spark.functions.urls import (
     url_canonical_col,
     url_domain_col,
     url_parts,
-    url_parts_py,
     url_parts_sql,
 )
+
+from .oracle.twins import url_parts_py
 
 KEYS = [
     "valid", "scheme", "host", "port", "path", "query", "domain",
